@@ -76,12 +76,8 @@ def main() -> None:
 
     tdf = spark.read.parquet(args.corpus)
 
-    from pyspark.sql import Window
-
     from lieu_spark.operators.assemble import assemble_conversations
-    from lieu_spark.operators.exact import exact_star_pairs
-    from lieu_spark.operators.lsh import band_table_dual, candidate_pairs
-    from lieu_spark.operators.simhash_path import simhash_candidate_pairs
+    from lieu_spark.operators import blocking
     from lieu_spark.operators.verify import dupe_pairs, verify_pairs
     from lieu_spark.pipeline import build_features
 
@@ -96,25 +92,12 @@ def main() -> None:
         "char_primary", "alt_hashes", "alt_sig",
     ]
     feat_slim = features.select(*slim_cols)
-    feat_content = feat_slim.filter(F.size("shingle_hashes") > 0)
-    rep_w = Window.partitionBy("text_sha")
-    feat_reps = (
-        feat_content.withColumn("_rep", F.min("conv_id").over(rep_w))
-        .filter(F.col("conv_id") == F.col("_rep"))
-        .drop("_rep")
-    )
-    bands = band_table_dual(feat_reps, cfg).persist()
+    feat_reps = blocking.representatives(feat_slim)
+    bands = blocking.rep_bands(feat_reps, cfg).persist()
     bands.count()
-    lsh_cand = candidate_pairs(bands, cfg, distinct=False).withColumn(
-        "source", F.lit("minhash_lsh")
-    )
-    exact_cand = exact_star_pairs(feat_slim).withColumn("source", F.lit("exact_sha"))
-    sim_cand = simhash_candidate_pairs(feat_reps, cfg, distinct=False)
-    merged = lsh_cand.unionByName(exact_cand).unionByName(
-        sim_cand.select("id_a", "id_b").withColumn("source", F.lit("simhash"))
-    )
     candidates = (
-        merged.groupBy("id_a", "id_b")
+        blocking.within_candidates(feat_reps, bands, feat_slim, cfg)
+        .groupBy("id_a", "id_b")
         .agg(F.array_sort(F.collect_set("source")).alias("sources"))
         .persist()
     )

@@ -102,44 +102,20 @@ def main() -> None:
     )
     features = run("features", build_features(conversations, cfg))
 
-    from pyspark.sql import Window
+    from lieu_spark.operators import blocking
 
     slim_cols = [
         "conv_id", "text_sha", "shingle_hashes", "sig", "simhash",
         "char_primary", "alt_hashes", "alt_sig",
     ]
     feat_slim = features.select(*slim_cols)
-    feat_content = feat_slim.filter(F.size("shingle_hashes") > 0)
-    rep_w = Window.partitionBy("text_sha")
-    feat_reps = (
-        feat_content.withColumn("_rep", F.min("conv_id").over(rep_w))
-        .filter(F.col("conv_id") == F.col("_rep"))
-        .drop("_rep")
-    )
-
-    from lieu_spark.operators.exact import exact_star_pairs
-    from lieu_spark.operators.lsh import band_table_dual, candidate_pairs
-    from lieu_spark.operators.simhash_path import simhash_candidate_pairs
-
-    bands = run("bands", band_table_dual(feat_reps, cfg))
-
-    try:  # distinct=False exists only on the optimized tree; the A/B
-        lsh_cand = candidate_pairs(bands, cfg, distinct=False)
-        sim_cand = simhash_candidate_pairs(feat_reps, cfg, distinct=False)
-    except TypeError:
-        lsh_cand = candidate_pairs(bands, cfg)
-        sim_cand = simhash_candidate_pairs(feat_reps, cfg)
-    lsh_cand = lsh_cand.withColumn("source", F.lit("minhash_lsh"))
-    exact_cand = exact_star_pairs(feat_slim).withColumn("source", F.lit("exact_sha"))
-    merged = lsh_cand.unionByName(exact_cand)
-    merged = merged.unionByName(
-        sim_cand.select("id_a", "id_b").withColumn("source", F.lit("simhash"))
-    )
+    feat_reps = blocking.representatives(feat_slim)
+    bands = run("bands", blocking.rep_bands(feat_reps, cfg))
     candidates = run(
         "candidates",
-        merged.groupBy("id_a", "id_b").agg(
-            F.array_sort(F.collect_set("source")).alias("sources")
-        ),
+        blocking.within_candidates(feat_reps, bands, feat_slim, cfg)
+        .groupBy("id_a", "id_b")
+        .agg(F.array_sort(F.collect_set("source")).alias("sources")),
     )
 
     from lieu_spark.operators.verify import dupe_pairs, verify_pairs

@@ -2,7 +2,8 @@
 ``AddressDeduperSpark.{dupe_sims, match, unique}`` and
 ``NameAddressDeduperSpark.dupe_sims``
 (/root/reference/lib/lieu/spark/dedupe.py:24-48,100-115,235-313), rebuilt
-on DataFrames.
+on DataFrames. ``match`` blocks through operators/blocking.py, the policy
+``dedupe`` runs (see it for the rep-blocking closure argument).
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, DedupeConfig
 from .operators.assemble import assemble_conversations
-from .operators.lsh import band_table_dual, match_pairs
+from .operators.blocking import cross_candidates, rep_bands, tag_reps
 from .operators.verify import verify_pairs
 from .pipeline import PipelineResult, build_features, run_pipeline
 
@@ -41,24 +42,14 @@ def match(
 
     Reference: AddressDeduperSpark.match (spark/dedupe.py:24-48).
 
-    Scale guards — the same blocking policy as run_pipeline
-    (pipeline.py:191-206), which banding the raw feature tables would
-    bypass: content-empty docs never band (their all-sentinel MinHash
-    signature collides in EVERY band with every other empty doc — a
-    quadratic blowup match_pairs has no salting against), and the
-    canonical side bands ONE representative per text_sha (a k-copy
-    boilerplate group would otherwise flood each band with all k
-    members). Verified representative pairs are expanded back to every
-    identical-text canonical member afterwards — exact, because
-    identical text implies identical features, hence identical
-    verdicts. Byte-identical matches (including content-empty docs,
-    which the previous banding-only path could only find through the
-    sentinel collision) come from a direct text_sha equi-join. The
-    incoming side is banded unblocked — each incoming id must appear
-    in the output individually, and incoming is the small side.
+    Blocking (operators/blocking.py): the canonical side bands one rep
+    per text_sha, the incoming side (small; each id must appear in the
+    output) bands every content-bearing doc, and ``cross_candidates``
+    pairs them.
+    Verified rep pairs are expanded back to every identical-text
+    canonical member — exact, because identical text implies identical
+    features, hence identical verdicts.
     """
-    from pyspark.sql import Window
-
     # both feature tables fan out to several consumers below (banding,
     # sha equi-join, verify features, member expansion) — persist so the
     # assembly shuffle + MinHash/SimHash UDF pass over each corpus runs
@@ -83,23 +74,25 @@ def match(
         ),
         cfg,
     ).persist()
-    rep_w = Window.partitionBy("text_sha")
-    canon_tag = canon.withColumn("_rep", F.min("conv_id").over(rep_w)).persist()
+    # reps over ALL canonical docs: content-empty ones still sha-join
+    # and expand (content is sha-determined, so the banded subset is
+    # exactly blocking.representatives(canon))
+    canon_tag = tag_reps(canon).persist()
     canon_reps = canon_tag.filter(F.col("conv_id") == F.col("_rep")).drop("_rep")
-    cb = band_table_dual(canon_reps.filter(F.size("shingle_hashes") > 0), cfg)
-    ib = band_table_dual(inc.filter(F.size("shingle_hashes") > 0), cfg)
-    # hot_cap: rep-dedup collapses byte-identical copies but NOT
-    # near-identical boilerplate (distinct shas, shared bands) — the
-    # same bound the refresh cross path applies
-    lsh_cand = match_pairs(cb, ib, cfg, hot_cap=cfg.hot_band_cap).select(
-        F.col("canonical_id").alias("id_a"), F.col("incoming_id").alias("id_b")
+    content = F.size("shingle_hashes") > 0
+    cand = (
+        cross_candidates(
+            rep_bands(canon_reps.filter(content), cfg),
+            canon_reps,
+            rep_bands(inc.filter(content), cfg),
+            inc,
+            cfg,
+        )
+        .select(
+            F.col("standing_id").alias("id_a"), F.col("incoming_id").alias("id_b")
+        )
+        .dropDuplicates(["id_a", "id_b"])
     )
-    sha_cand = (
-        canon_reps.select(F.col("conv_id").alias("id_a"), "text_sha")
-        .join(inc.select(F.col("conv_id").alias("id_b"), "text_sha"), "text_sha")
-        .select("id_a", "id_b")
-    )
-    cand = lsh_cand.unionByName(sha_cand).dropDuplicates(["id_a", "id_b"])
     # cross-set verification: union the two feature tables (ids disjoint
     # by construction; caller guarantees distinct key spaces). Only rep
     # ids appear on the canonical side of cand, so reps suffice.

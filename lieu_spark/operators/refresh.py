@@ -15,11 +15,12 @@ edit mix. Verified-pair sets may differ in which member of an
 identical-text (same text_sha) group carries an edge — rep-blocking
 picks different representatives on the two paths — but every such edge
 closes through the exact-sha star, so connected components agree
-exactly (the same closure argument the streaming parity test uses).
+exactly (the rep-blocking closure argument of operators/blocking.py,
+whose functions build both paths' candidates).
 Caveat: parity is exact only while no band group exceeds
 cfg.hot_band_cap. On hot (boilerplate) bands BOTH paths are lossy by
 design — candidate_pairs salts the scratch self-join, and the cross
-path here applies the same sub-bucket rule via match_pairs(hot_cap=) —
+path here applies the same sub-bucket rule via cross_candidates —
 but the two runs can salt a hot group differently, so individual
 dropped-pair sets (recovered by the other b-1 bands, as always) may
 differ there.
@@ -46,7 +47,7 @@ What is incremental (the scale story):
     bottleneck (it is linear in dup pairs, not in documents).
 
 Rep-blocking repair: the band state holds one representative per
-text_sha group (pipeline.py feat_reps). Removing a representative would
+text_sha group (blocking.representatives). Removing a representative would
 silently unband its surviving group and drop the star edges that hang
 off the group minimum, splitting clusters. Both are repaired from the
 (small) set of sha groups that lost a member: the minimum surviving
@@ -71,8 +72,8 @@ from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
 from .cluster import clusters_with_singletons, connected_components
-from .exact import exact_star_pairs
-from .lsh import band_table_dual, candidate_pairs, match_pairs
+from . import blocking
+from .simhash_path import simhash_match_pairs
 from .verify import dupe_pairs, verify_pairs
 
 # Above this many CDC rows the broadcast hints on delta/gone-derived
@@ -106,7 +107,6 @@ def refresh_dedupe(
     old_verified: DataFrame,
     cfg: DedupeConfig,
     featurize: Callable[[DataFrame], DataFrame],
-    with_simhash_path: bool | None = None,
     checkpoint_state: bool = True,
     old_clusters: DataFrame | None = None,
 ) -> RefreshResult:
@@ -120,14 +120,12 @@ def refresh_dedupe(
     rows; its output must cover ``old_features``' columns (it is only
     ever called on content the old snapshot has never seen).
 
-    ``with_simhash_path`` defaults to AUTO (None):
-    ``cfg.with_simhash_path AND "simhash" in old_features.columns`` —
-    cfg carries the INTENT (it is in the checkpoint fingerprint, so a
-    refresh_pipeline store provably matches), the column check is the
-    CAPABILITY guard (hand-built state without the column physically
-    cannot run the family — the test featurizers are such state).
-    Pass an explicit bool to override; callers doing so own the
-    refresh-vs-scratch parity argument themselves.
+    The SimHash family runs when ``cfg.with_simhash_path`` is set AND
+    ``old_features`` carries a ``simhash`` column: cfg carries the
+    INTENT (it is in the checkpoint fingerprint, so a refresh_pipeline
+    store provably matches), the column check is the CAPABILITY guard
+    (hand-built state without the column physically cannot run the
+    family — the test featurizers are such state).
 
     Auxiliary-field pair rules (cfg.asymmetry_field / revision_field)
     are REFUSED here: refresh's rep selection, star repair, and
@@ -163,10 +161,6 @@ def refresh_dedupe(
         )
     if "text_sha" not in new_conversations.columns:
         raise ValueError("new_conversations must carry text_sha")
-    if with_simhash_path is None:
-        with_simhash_path = (
-            cfg.with_simhash_path and "simhash" in old_features.columns
-        )
 
     # ---- CDC on (id, content hash) --------------------------------
     new_keys = new_conversations.select(idc, "text_sha")
@@ -282,78 +276,46 @@ def refresh_dedupe(
     promoted_feats = old_features.join(bc(promoted), [idc, "text_sha"], "left_semi")
 
     # ---- incoming side: delta reps ∪ promoted reps ----------------
-    delta_content = delta_feats.filter(F.size("shingle_hashes") > 0)
-    d_rep = delta_content.groupBy("text_sha").agg(F.min(idc).alias(idc))
-    delta_reps = delta_content.join(d_rep, [idc, "text_sha"], "left_semi")
-    incoming_feats = delta_reps.select(*cols).unionByName(
-        promoted_feats.select(*cols)
-    ).localCheckpoint()
-    incoming_bands = band_table_dual(incoming_feats, cfg)
+    incoming_feats = (
+        blocking.representatives(delta_feats).select(*cols)
+        .unionByName(promoted_feats.select(*cols))
+        .localCheckpoint()
+    )
+    incoming_bands = blocking.rep_bands(incoming_feats, cfg)
 
-    # ---- candidates ------------------------------------------------
-    # distinct=False: every branch funnels into the one dropDuplicates
-    # on the combined candidate union below — the family-internal pair
-    # dedup would shuffle the same pair set twice (pipeline rule)
-    within = candidate_pairs(incoming_bands, cfg, distinct=False).select(
-        "id_a", "id_b"
-    )
-    # hot_cap bounds the standing-side fanout of boilerplate bands the
-    # same way candidate_pairs salts the self-join (see match_pairs)
-    cross = match_pairs(
-        standing_bands, incoming_bands, cfg, hot_cap=cfg.hot_band_cap
-    ).select(*_pair(F.col("canonical_id"), F.col("incoming_id")))
-    star_delta = exact_star_pairs(delta_feats.select(idc, "text_sha")).select(
-        "id_a", "id_b"
-    )
-    # delta docs joining an EXISTING identical-text group: one edge to
-    # the minimum surviving member of the shared sha (connectivity —
-    # the survivors' own stars do the rest)
+    # ---- candidates (operators/blocking.py) -----------------------
+    # within the incoming set: LSH ∪ SimHash over the incoming reps ∪
+    # the delta's exact star
+    within = blocking.within_candidates(
+        incoming_feats, incoming_bands, delta_feats, cfg
+    ).select("id_a", "id_b")
+    # incoming vs standing: band match ∪ an edge from each delta doc
+    # joining an EXISTING identical-text group to the minimum surviving
+    # member of the shared sha (connectivity — the survivors' own stars
+    # do the rest)
     delta_shas = delta_feats.select("text_sha").distinct()
     surv_sha_min = (
         surv_feats.join(bc(delta_shas), "text_sha", "left_semi")
         .groupBy("text_sha")
-        .agg(F.min(idc).alias("__sid"))
+        .agg(F.min(idc).alias(idc))
     )
-    cross_sha = delta_feats.select(idc, "text_sha").join(surv_sha_min, "text_sha").select(
-        *_pair(F.col(idc), F.col("__sid"))
-    )
-    cand = (
-        within.unionByName(cross)
-        .unionByName(star_delta)
-        .unionByName(cross_sha)
-        .unionByName(star_repair)
-    )
-    if with_simhash_path:
-        from .simhash_path import simhash_candidate_pairs, simhash_chunk_table
-        from ..functions.simhash import hamming64
-
-        sim_within = simhash_candidate_pairs(
-            incoming_feats, cfg, distinct=False
-        ).select("id_a", "id_b")
-        standing_rep_ids = standing_bands.select("id").distinct()
+    cross = blocking.cross_candidates(
+        standing_bands, surv_sha_min, incoming_bands, delta_feats, cfg
+    ).select(*_pair(F.col("standing_id"), F.col("incoming_id")))
+    cand = within.unionByName(cross).unionByName(star_repair)
+    # SimHash across the snapshots: incoming reps vs the standing reps
+    # (the band state's ids); same capability guard as within_candidates
+    if cfg.with_simhash_path and "simhash" in old_features.columns:
         standing_rep_feats = old_features.join(
-            standing_rep_ids.withColumnRenamed("id", idc), idc, "left_semi"
+            standing_bands.select(F.col("id").alias(idc)).distinct(),
+            idc,
+            "left_semi",
         )
-        sc = simhash_chunk_table(standing_rep_feats, cfg).withColumnRenamed("id", "__ca")
-        ic = simhash_chunk_table(incoming_feats, cfg).withColumnRenamed("id", "__cb")
-        sim_cross_raw = (
-            sc.join(ic, ["chunk", "chunk_bits"])
-            .select("__ca", "__cb")
-            .dropDuplicates(["__ca", "__cb"])
+        cand = cand.unionByName(
+            simhash_match_pairs(standing_rep_feats, incoming_feats, cfg).select(
+                *_pair(F.col("canonical_id"), F.col("incoming_id"))
+            )
         )
-        ha = standing_rep_feats.select(
-            F.col(idc).alias("__ca"), F.col("simhash").alias("__ha")
-        )
-        hb = incoming_feats.select(
-            F.col(idc).alias("__cb"), F.col("simhash").alias("__hb")
-        )
-        sim_cross = (
-            sim_cross_raw.join(ha, "__ca")
-            .join(hb, "__cb")
-            .filter(hamming64(F.col("__ha"), F.col("__hb")) <= cfg.simhash_hamming_max)
-            .select(*_pair(F.col("__ca"), F.col("__cb")))
-        )
-        cand = cand.unionByName(sim_within).unionByName(sim_cross)
     cand = (
         cand.filter(F.col("id_a") != F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
@@ -492,10 +454,9 @@ def refresh_pipeline(
     ``cfg`` must match the config the store was written with — ENFORCED
     here against the stage metadata's recorded fingerprint (a mismatch
     would silently merge pairs verified under different thresholds; it
-    raises instead). That same gate is why there is no
-    ``with_simhash_path`` argument here: the flag is a DedupeConfig
-    field (fingerprint-captured), so the matched cfg already says
-    exactly which candidate families the store was built with.
+    raises instead). The SimHash family switch is a DedupeConfig field
+    (fingerprint-captured), so the matched cfg already says exactly
+    which candidate families the store was built with.
 
     checkpoint_state is OFF on this path: the returned state frames are
     shallow plans over the parquet state (one anti-join / one union),

@@ -39,11 +39,23 @@ def _chunk_structs(cfg: DedupeConfig):
     )
 
 
+def _chunk_rows(features: DataFrame, cfg: DedupeConfig, id_col: str) -> DataFrame:
+    """(id, simhash) -> (id, simhash, chunk, chunk_bits). The full
+    simhash rides the chunk rows (+8 bytes/row), so a chunk join yields
+    BOTH sides' hashes directly and the hamming confirmation runs on
+    the joined row — no enrichment joins back onto the feature table."""
+    return features.select(
+        F.col(id_col).alias("id"), F.col("simhash"),
+        F.explode(_chunk_structs(cfg)).alias("ck"),
+    ).select(
+        "id", "simhash",
+        F.col("ck.chunk").alias("chunk"), F.col("ck.chunk_bits").alias("chunk_bits"),
+    )
+
+
 def simhash_chunk_table(features: DataFrame, cfg: DedupeConfig, id_col: str = "conv_id") -> DataFrame:
     """(id, simhash) -> (id, chunk, chunk_bits)."""
-    return features.select(
-        F.col(id_col).alias("id"), F.explode(_chunk_structs(cfg)).alias("ck")
-    ).select("id", F.col("ck.chunk").alias("chunk"), F.col("ck.chunk_bits").alias("chunk_bits"))
+    return _chunk_rows(features, cfg, id_col).drop("simhash")
 
 
 def simhash_chunk_stats(features: DataFrame, cfg: DedupeConfig, id_col: str = "conv_id") -> DataFrame:
@@ -90,24 +102,11 @@ def simhash_candidate_pairs(
         if cfg.simhash_hot_chunk_cap is not None
         else (1 << 62)  # effectively "never split"; keeps one plan shape
     )
-    # the full simhash rides the chunk rows (+8 bytes/row), so the
-    # self-join yields BOTH sides' hashes directly and the hamming
-    # confirmation runs on the joined row — no post-dedup enrichment
-    # joins back onto the feature table, which cost two extra scans of
-    # the (often unmaterialized rep-window) feature lineage per run.
     # Hamming is filtered BEFORE the pair dedup: duplicates of a pair
     # (multi-chunk collisions) carry the identical hamming value, so
-    # the deduped output is row-identical to the old join-after-dedup
-    # shape.
-    chunk_tbl = features.select(
-        F.col(id_col).alias("id"), F.col("simhash"),
-        F.explode(_chunk_structs(cfg)).alias("ck"),
-    ).select(
-        "id", "simhash",
-        F.col("ck.chunk").alias("chunk"), F.col("ck.chunk_bits").alias("chunk_bits"),
-    )
+    # the deduped output is row-identical to a join-after-dedup shape.
     tbl = salted_groups(
-        chunk_tbl,
+        _chunk_rows(features, cfg, id_col),
         ["chunk", "chunk_bits"],
         cap,
     ).filter(F.col("bsize") > 1).select("chunk", "chunk_bits", "sub", "id", "simhash")
@@ -127,3 +126,28 @@ def simhash_candidate_pairs(
         .select("id_a", "id_b", "hamming")
     )
     return pairs.dropDuplicates(["id_a", "id_b"]) if distinct else pairs
+
+
+def simhash_match_pairs(
+    canonical: DataFrame,
+    incoming: DataFrame,
+    cfg: DedupeConfig,
+    id_col: str = "conv_id",
+) -> DataFrame:
+    """Cross-dataset twin of simhash_candidate_pairs (snapshot refresh:
+    incoming reps vs standing reps) -> distinct (canonical_id,
+    incoming_id) within cfg.simhash_hamming_max. Unsalted: the
+    pigeonhole guarantee needs every chunk group whole."""
+    c = _chunk_rows(canonical, cfg, id_col).withColumnsRenamed(
+        {"id": "canonical_id", "simhash": "simhash_a"}
+    )
+    i = _chunk_rows(incoming, cfg, id_col).withColumnsRenamed(
+        {"id": "incoming_id", "simhash": "simhash_b"}
+    )
+    hamming = hamming64(F.col("simhash_a"), F.col("simhash_b"))
+    return (
+        c.join(i, ["chunk", "chunk_bits"])
+        .filter(hamming <= cfg.simhash_hamming_max)
+        .select("canonical_id", "incoming_id")
+        .dropDuplicates()
+    )

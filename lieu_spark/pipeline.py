@@ -6,7 +6,7 @@ Stage DAG (each checkpointable, each recorded in the metrics table):
     -> assemble   (conv_id, turns, doc, text_sha)            [1 shuffle]
     -> features   (+tokens, shingle_hashes, sig, simhash)    [narrow]
     -> bands      (id, band, band_hash)                      [narrow]
-    -> candidates (LSH pairs ∪ SimHash pairs, tagged)        [2-3 shuffles]
+    -> candidates (LSH ∪ exact star ∪ SimHash, tagged)      [2-3 shuffles]
     -> verified   (jaccard, status, method)                  [2 join shuffles]
     -> clusters   (connected components + singletons)        [iterative]
     -> spans      (copied-span stage on mid-similarity pairs)[mapInPandas]
@@ -14,6 +14,11 @@ Stage DAG (each checkpointable, each recorded in the metrics table):
 Lifecycle parity with the reference's DedupeGeoJSONJob.spark()
 (/root/reference/scripts/jobs/dedupe_geojson.py:117-201) — see
 SURVEY.md §3.1 for the stage-by-stage mapping.
+
+Representative selection and candidate generation (bands, candidates)
+are the shared blocking policy of operators/blocking.py — see its
+docstring for the rep-blocking closure argument; the stream, refresh and
+api.match build their candidates from the same functions.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -43,9 +48,8 @@ from .functions.text import (
 from .metrics import record_stage
 from .operators.assemble import assemble_conversations
 from .operators.cluster import clusters_with_singletons, connected_components
-from .operators.exact import exact_star_pairs
-from .operators.lsh import band_stats, band_table_dual, candidate_pairs
-from .operators.simhash_path import simhash_candidate_pairs
+from .operators.blocking import rep_bands, representatives, within_candidates
+from .operators.lsh import band_stats
 from .operators.spans import copied_spans, span_candidates, winnow_span_candidates
 from .operators.verify import dupe_pairs, verify_pairs
 
@@ -225,32 +229,14 @@ def run_pipeline(
     if cfg.verify_mode == "soft_tfidf":
         slim_cols.insert(2, "tokens")
     feat_slim = features.select(*slim_cols)
-    # content-empty conversations take no part in similarity blocking
-    # (P3 parity: the reference drops geo-less docs, spark/tfidf.py:67);
-    # byte-identical ones are still caught by the exact-sha star path.
-    feat_content = feat_slim.filter(F.size("shingle_hashes") > 0)
-    # similarity blocking runs on ONE representative per text_sha:
-    # identical texts have identical shingles, so every member edge is
-    # implied by (rep edge + exact star) and recovered exactly by
-    # connected components. This keeps boilerplate-heavy corpora linear
-    # — a 5k-copy group would otherwise flood every band (the 100 TB
-    # version of lieu's two-pass star trick, spark/dedupe.py:63-88).
-    #
-    # Aux-rule mode: the rep (like the exact star) is per
-    # (text_sha, combined aux signature) SUBGROUP — under per-pair
-    # auxiliary rules a member's verdict against an external near-dup
-    # depends on the MEMBER's own signature, so a single per-sha rep
-    # would judge every member on the rep's signature and a refused
-    # hub edge could sever a member's only path to partners its own
-    # signature is compatible with. One extra rep per distinct
-    # signature per sha (tool-vocabulary-bounded, not corpus-bounded).
+    # rep-blocking (operators/blocking.py); in aux-rule mode reps and
+    # star are per (text_sha, combined aux signature) subgroup
     aux_fields = sorted(
         {f for f in (cfg.asymmetry_field, cfg.revision_field) if f is not None}
     )
-    aux_sigs = None
-    rep_keys = ["text_sha"]
     if aux_fields:
         from .operators.asymmetry import combined_field_signatures
+        from .operators.exact import exact_star_pairs_grouped
 
         # lazy localCheckpoint: the narrow (conv_id, aux_sig, aux_class)
         # frame feeds rep selection, banding, simhash, winnowing AND the
@@ -268,68 +254,43 @@ def run_pipeline(
         aux_sigs = combined_field_signatures(
             transcripts, aux_fields, presence_field=cfg.asymmetry_field
         ).localCheckpoint(eager=False)
-        feat_content = feat_content.join(
-            aux_sigs.select("conv_id", F.col("aux_sig").alias("_aux")),
-            "conv_id",
-            "left",
-        ).withColumn("_aux", F.coalesce(F.col("_aux"), F.lit("")))
-        rep_keys = ["text_sha", "_aux"]
-    rep_w = Window.partitionBy(*rep_keys)
-    feat_reps = (
-        feat_content.withColumn("_rep", F.min("conv_id").over(rep_w))
-        .filter(F.col("conv_id") == F.col("_rep"))
-        .drop("_rep", *(["_aux"] if aux_fields else []))
-    )
+        feat_reps = representatives(
+            feat_slim.join(
+                aux_sigs.select("conv_id", F.col("aux_sig").alias("_aux")),
+                "conv_id",
+                "left",
+            ).withColumn("_aux", F.coalesce(F.col("_aux"), F.lit(""))),
+            ["_aux"],
+        ).drop("_aux")
+        # hub edges starred per verdict-equivalence class (the
+        # asymmetry field's presence flag): linear in subgroups
+        star = exact_star_pairs_grouped(
+            feat_slim.select("conv_id", "text_sha")
+            .join(aux_sigs, "conv_id", "left")
+            .withColumn("aux_sig", F.coalesce(F.col("aux_sig"), F.lit("")))
+            .withColumn(
+                "aux_class",
+                F.coalesce(
+                    F.col("aux_class"),
+                    F.lit("0" if cfg.asymmetry_field else ""),
+                ),
+            ),
+            "aux_sig",
+            class_col="aux_class",
+        )
+    else:
+        feat_reps = representatives(feat_slim)
+        star = None
 
-    bands = stage("bands", lambda: band_table_dual(feat_reps, cfg))
+    bands = stage("bands", lambda: rep_bands(feat_reps, cfg))
     bstats = stage("band_stats", lambda: band_stats(bands, cfg))
 
     def build_candidates() -> DataFrame:
-        # distinct=False on both similarity families: the source-tag
-        # groupBy below is itself a full (id_a, id_b) aggregation, so
-        # the families' internal pair-dedup exchanges would shuffle the
-        # pair set a second time for nothing — multi-band/multi-chunk
-        # duplicates are collapsed by collect_set's map-side partial.
-        lsh_cand = candidate_pairs(bands, cfg, distinct=False).withColumn(
-            "source", F.lit("minhash_lsh")
-        )
-        if aux_fields:
-            # aux-rule mode: the plain star's closure argument breaks
-            # (identical text no longer implies identical verdicts), so
-            # star per (text_sha, combined aux signature) subgroup, with
-            # hub edges STARRED per verdict-equivalence class (the
-            # asymmetry field's presence flag) — linear in subgroups,
-            # never quadratic in distinct signatures per sha. aux_sigs
-            # is the checkpointed frame the rep selection above used.
-            from .operators.exact import exact_star_pairs_grouped
-
-            star_in = (
-                feat_slim.select("conv_id", "text_sha")
-                .join(aux_sigs, "conv_id", "left")
-                .withColumn("aux_sig", F.coalesce(F.col("aux_sig"), F.lit("")))
-                .withColumn(
-                    "aux_class",
-                    F.coalesce(
-                        F.col("aux_class"),
-                        F.lit("0" if cfg.asymmetry_field else ""),
-                    ),
-                )
-            )
-            exact_cand = exact_star_pairs_grouped(
-                star_in, "aux_sig", class_col="aux_class"
-            )
-        else:
-            exact_cand = exact_star_pairs(feat_slim)
-        exact_cand = exact_cand.withColumn("source", F.lit("exact_sha"))
-        merged = lsh_cand.unionByName(exact_cand)
-        # family toggle lives on cfg (not an argument) so the stage
-        # fingerprint captures it — see DedupeConfig.with_simhash_path
-        if cfg.with_simhash_path:
-            sim_cand = simhash_candidate_pairs(
-                feat_reps, cfg, distinct=False
-            ).select("id_a", "id_b").withColumn("source", F.lit("simhash"))
-            merged = merged.unionByName(sim_cand)
-        return merged.groupBy("id_a", "id_b").agg(
+        # multi-band/multi-chunk duplicates collapse in collect_set's
+        # map-side partial
+        return within_candidates(
+            feat_reps, bands, feat_slim, cfg, star=star
+        ).groupBy("id_a", "id_b").agg(
             F.array_sort(F.collect_set("source")).alias("sources")
         )
 

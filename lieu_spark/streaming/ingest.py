@@ -26,6 +26,10 @@ Per-batch match cost is therefore O(batch) work + one pruned metadata-
 backed scan, not O(index) recompute — the per-batch walls stay flat as
 the index grows (tracked in bench.py's ``stream_batch_walls``).
 
+Candidates come from operators/blocking.py (see it for the rep-blocking
+closure argument). SimHash pairs WITHIN a micro-batch only: the stream
+state keeps no chunk fold, so cross-batch SimHash pairs are not matched.
+
 Semantics note: a conversation is matchable once all its turns have
 arrived in one micro-batch window here; cross-batch turn assembly is
 provided by ``streaming/stateful.py`` (``applyInPandasWithState`` keyed
@@ -42,8 +46,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, DedupeConfig
 from ..metrics import record_stages
 from ..operators.assemble import assemble_conversations
-from ..operators.exact import exact_star_pairs
-from ..operators.lsh import band_table_dual, candidate_pairs, match_pairs
+from ..operators import blocking
 from ..operators.verify import verify_pairs
 from ..pipeline import build_features
 
@@ -466,7 +469,7 @@ class IncrementalDeduper:
         idempotence recipe as the feature fold)."""
         self._stamp_band_layout()
         (
-            band_table_dual(feats, self.cfg)
+            blocking.rep_bands(feats, self.cfg)
             .withColumn(
                 "bh_bucket",
                 F.pmod(F.col("band_hash"), F.lit(self._band_buckets())).cast("int"),
@@ -589,28 +592,17 @@ class IncrementalDeduper:
         return index.filter(F.col("conv_id").isin(ids))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Candidates = within-batch self-pairs (LSH bands + exact-sha
-        star — the same families as the batch pipeline, so a batch's OWN
-        near-dups pair here, not just batch-vs-index) ∪ incoming-vs-index
-        pairs (LSH match against the STORED band state ∪ text_sha
-        equi-join). Dupe members (the id_b side — min-id canonical stays)
-        are withheld from the index fold, so connected components over
-        the accumulated pairs reproduces the batch pipeline's clusters
-        (parity asserted at sf-scale in tests/test_streaming.py and
-        timed in bench.py).
-
-        Banding uses the batch pipeline's rep-blocking: one content-
-        bearing representative per text_sha (pipeline.py feat_reps) —
-        a boilerplate-heavy micro-batch with a k-copy group would
-        otherwise flood every band with all k members and generate
-        O(k^2) within-batch pairs the exact star already implies.
-        Member edges are recovered exactly: rep-vs-X similarity edge +
-        (rep, member) star edge close through connected components,
-        and the member is withheld from the index as the id_b side of
-        its star edge. The cross-batch text_sha join is what makes the
-        pipeline's GLOBAL exact star hold across batches — it also
-        covers content-empty conversations, which rep-blocking excludes
-        from banding (the batch pipeline's P3/exact-only policy).
+        """Candidates (operators/blocking.py) = within-batch self-pairs
+        (``within_candidates``: the batch pipeline's families, so a
+        batch's OWN near-dups pair here) ∪ incoming-vs-index pairs
+        (``cross_candidates``: LSH match against the STORED band state ∪
+        text_sha equi-join against the stored sha fold — the sha join
+        makes the pipeline's GLOBAL exact star hold across batches).
+        SimHash pairs only within a batch (module docstring). Dupe
+        members (the id_b side — min-id canonical stays) are withheld
+        from the index fold, so connected components over the
+        accumulated pairs reproduces the batch pipeline's clusters
+        (parity asserted in tests/test_streaming.py).
 
         The vs-index match joins the batch's bands (broadcast — a
         micro-batch is small) against the stored, pre-derived band
@@ -633,8 +625,6 @@ class IncrementalDeduper:
         recipe)."""
         import time as _time
 
-        from pyspark.sql import Window
-
         t0 = _time.time()
         # max_turns MUST flow here: a capped conversation's stream-side
         # text_sha has to hash identically to pipeline-built stored
@@ -652,25 +642,13 @@ class IncrementalDeduper:
         # the persisted frame, so it materializes work every later
         # action reuses (no re-execution).
         small_batch = feats.count() <= STREAM_BROADCAST_CAP
-        rep_w = Window.partitionBy("text_sha")
-        feat_reps = (
-            feats.filter(F.size("shingle_hashes") > 0)
-            .withColumn("_rep", F.min("conv_id").over(rep_w))
-            .filter(F.col("conv_id") == F.col("_rep"))
-            .drop("_rep")
-        )
-        # persisted: three consumers (within-batch candidate_pairs, the
-        # bucket-prune collect, the vs-index match) are differently
-        # pruned, so without this each re-runs the rep window + dual
-        # band derivation over the cached feats per batch
-        feat_bands = band_table_dual(feat_reps, self.cfg).persist()
-        # distinct=False: every candidate branch funnels into the batch's
-        # dropDuplicates below, so the band path's internal pair-dedup
-        # exchange would shuffle the same pair set twice (the pipeline's
-        # build_candidates rule)
-        within = candidate_pairs(feat_bands, self.cfg, distinct=False).unionByName(
-            exact_star_pairs(feats)
-        )
+        feat_reps = blocking.representatives(feats)
+        # persisted: three differently-pruned consumers (within-batch
+        # LSH, the bucket-prune collect, the vs-index match)
+        feat_bands = blocking.rep_bands(feat_reps, self.cfg).persist()
+        within = blocking.within_candidates(
+            feat_reps, feat_bands, feats, self.cfg
+        ).select("id_a", "id_b")
         index = self._load_index(before_batch=batch_id)
         if index is not None:
             # state loads stay serial (they can backfill/write); the two
@@ -690,32 +668,22 @@ class IncrementalDeduper:
                 fut_shas = pool.submit(self._pruned_shas, stored_shas, feats)
                 pruned_bands = fut_bands.result()
                 pruned_shas = fut_shas.result()
-            # hot_cap bounds the standing-boilerplate fanout: a stored
-            # band group that grows with stream age would otherwise emit
-            # |group| x |incoming-in-group| pairs per micro-batch. Below
-            # the cap the match is still full within-block pairing
-            # (lib/lieu/spark/dedupe.py:24-48 parity); the broadcast
-            # hint is re-applied inside capped_group_join so the stored
-            # side still never shuffles.
-            cross_lsh = match_pairs(
+            cross = blocking.cross_candidates(
                 pruned_bands,
+                pruned_shas,
                 feat_bands,
+                feats,
                 self.cfg,
                 broadcast_incoming=small_batch,
-                hot_cap=self.cfg.hot_band_cap,
             ).select(
-                F.col("canonical_id").alias("id_a"),
+                F.col("standing_id").alias("id_a"),
                 F.col("incoming_id").alias("id_b"),
             )
-            inc_shas = feats.select(F.col("conv_id").alias("id_b"), "text_sha")
-            if small_batch:
-                inc_shas = F.broadcast(inc_shas)
-            cross_sha = pruned_shas.select(
-                F.col("conv_id").alias("id_a"), "text_sha"
-            ).join(inc_shas, "text_sha").select("id_a", "id_b")
-            cand = within.unionByName(cross_lsh).unionByName(
-                cross_sha
-            ).dropDuplicates(["id_a", "id_b"]).persist()
+            cand = (
+                within.unionByName(cross)
+                .dropDuplicates(["id_a", "id_b"])
+                .persist()
+            )
             # bound the verify-side index scan: the only canonical
             # features verification can touch are the cand id_a rows
             # (the id_b side is always this batch). For the typical

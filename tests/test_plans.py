@@ -37,13 +37,68 @@ def test_parquet_pushdown_and_pruning(spark):
     assert "doc_id" in read_schema and "n_chars" in read_schema
 
 
-def _feats(spark, n=60):
+def _transcripts(spark, n=60):
     rows = corpus.generate_rows(42, n)
-    tdf = spark.createDataFrame(
+    return spark.createDataFrame(
         [(r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts) for r in rows],
         corpus.TRANSCRIPT_SCHEMA,
     )
-    return build_features(assemble_conversations(tdf), CFG)
+
+
+def _feats(spark, n=60):
+    return build_features(assemble_conversations(_transcripts(spark, n)), CFG)
+
+
+def _plan_nodes(df) -> list:
+    """Operators of the frame's own current physical plan. Cached
+    relations are leaves here, so persisted upstream stages (features,
+    conversations) do not count toward the frame's exchanges."""
+    out = []
+    stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_pipeline_candidates_plan_pinned(spark):
+    """run_pipeline's candidates stage (operators/blocking.py) keeps the
+    plan of the inline assembly it replaced, measured on this corpus:
+    12 hash exchanges — 7 on text_sha (the rep window under each of the
+    6 rep consumers, plus the exact star), one salt window per side of
+    each similarity self-join, one for the source-tag groupBy — and the
+    two self-joins keyed on plain (key, sub) attributes."""
+    import re
+    from collections import Counter
+
+    from lieu_spark.pipeline import run_pipeline
+
+    res = run_pipeline(spark, _transcripts(spark), CFG, with_spans=False)
+    nodes = _plan_nodes(res.candidates)
+
+    def keys(s: str) -> str:
+        return re.sub(r"#\d+L?", "", s)
+
+    def part_keys(node) -> str:
+        part = keys(node.outputPartitioning().toString())
+        return re.sub(r"^hashpartitioning\((.*), \d+\)$", r"\1", part)
+
+    exchanges = Counter(part_keys(n) for n in nodes if n.nodeName() == "Exchange")
+    assert exchanges == {
+        "text_sha": 7,
+        "band, band_hash": 2,
+        "chunk, chunk_bits": 2,
+        "id_a, id_b": 1,
+    }, exchanges
+    join_keys = sorted(
+        keys(n.leftKeys().toString()) for n in nodes if "Join" in n.nodeName()
+    )
+    assert join_keys == [
+        "List(band, band_hash, sub)",
+        "List(chunk, chunk_bits, sub)",
+    ], join_keys
 
 
 def test_verify_plan_shape(spark):

@@ -418,22 +418,21 @@ def test_match_pairs_broadcast_composes_with_hot_cap(spark):
 
 
 def test_refresh_simhash_autodetect(spark):
-    """with_simhash_path=None is cfg.with_simhash_path gated on the
-    old state actually carrying a simhash column (the capability
-    guard): CFG has the family ON, but the test featurize emits no
-    simhash column -> auto-off must reproduce the explicit-False
-    result."""
+    """The SimHash family is cfg.with_simhash_path gated on the old
+    state actually carrying a simhash column (the capability guard):
+    CFG has the family ON, but the test featurize emits no simhash
+    column -> auto-off must reproduce the family-off config's result."""
     old = _convs(spark, SNAP1)
     feats, bands, verified, _ = _scratch(old)
     assert "simhash" not in feats.columns
     auto = refresh_dedupe(
         _convs(spark, SNAP2), feats, bands, verified, CFG, _featurize
     )
-    explicit = refresh_dedupe(
-        _convs(spark, SNAP2), feats, bands, verified, CFG, _featurize,
-        with_simhash_path=False,
+    off = refresh_dedupe(
+        _convs(spark, SNAP2), feats, bands, verified,
+        DedupeConfig(with_simhash_path=False), _featurize,
     )
-    assert _cluster_map(auto.clusters) == _cluster_map(explicit.clusters)
+    assert _cluster_map(auto.clusters) == _cluster_map(off.clusters)
 
 
 def test_refresh_correct_with_broadcast_hints_off(spark, monkeypatch):

@@ -71,6 +71,39 @@ def test_incremental_stream_dedupe(spark, tmp_path):
     assert index2.count() == n1  # batch 2 was all dupes; nothing new folded
 
 
+def test_stream_simhash_within_batch_matches_pipeline(spark, tmp_path):
+    """A word-shuffled copy keeps the token multiset (SimHash hamming 0)
+    but shares almost no 5-shingles, so only the SimHash family pairs
+    it. Arriving in one file, the stream's within-batch candidates
+    (blocking.within_candidates, gated on cfg.with_simhash_path like
+    the pipeline's) must yield the same verified row as run_pipeline."""
+    import random
+    from datetime import datetime
+
+    from lieu_spark.pipeline import run_pipeline
+
+    words = [f"word{i}" for i in range(80)]
+    shuffled = list(words)
+    random.Random(3).shuffle(shuffled)
+    ts = datetime(2024, 1, 1)
+    tdf = spark.createDataFrame(
+        [
+            ("s000000001", 0, "user", " ".join(words), None, ts),
+            ("s000000002", 0, "user", " ".join(shuffled), None, ts),
+        ],
+        corpus.TRANSCRIPT_SCHEMA,
+    )
+    in_dir = tmp_path / "in"
+    tdf.coalesce(1).write.parquet(str(in_dir))
+    run_stream(spark, str(in_dir), str(tmp_path / "work"), CFG, available_now=True)
+
+    cols = ["id_a", "id_b", "jaccard", "is_exact", "status"]
+    batch = run_pipeline(spark, tdf, CFG, with_spans=False).verified
+    assert [r.sources for r in batch.collect()] == [["simhash"]]
+    stream = spark.read.parquet(str(tmp_path / "work" / "pairs"))
+    assert stream.select(*cols).collect() == batch.select(*cols).collect()
+
+
 @pytest.mark.slow
 def test_stream_batch_cluster_parity(spark, tmp_path):
     """The foreachBatch incremental path over the corpus chunked into 3
