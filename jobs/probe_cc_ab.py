@@ -78,6 +78,7 @@ def main() -> None:
 
     from lieu_spark.operators.assemble import assemble_conversations
     from lieu_spark.operators import blocking
+    from lieu_spark.operators.lsh import band_table_dual
     from lieu_spark.operators.verify import dupe_pairs, verify_pairs
     from lieu_spark.pipeline import build_features
 
@@ -93,7 +94,7 @@ def main() -> None:
     ]
     feat_slim = features.select(*slim_cols)
     feat_reps = blocking.representatives(feat_slim)
-    bands = blocking.rep_bands(feat_reps, cfg).persist()
+    bands = band_table_dual(feat_reps, cfg).persist()
     bands.count()
     candidates = (
         blocking.within_candidates(feat_reps, bands, feat_slim, cfg)

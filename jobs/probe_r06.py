@@ -103,6 +103,7 @@ def main() -> None:
     features = run("features", build_features(conversations, cfg))
 
     from lieu_spark.operators import blocking
+    from lieu_spark.operators.lsh import band_table_dual
 
     slim_cols = [
         "conv_id", "text_sha", "shingle_hashes", "sig", "simhash",
@@ -110,7 +111,7 @@ def main() -> None:
     ]
     feat_slim = features.select(*slim_cols)
     feat_reps = blocking.representatives(feat_slim)
-    bands = run("bands", blocking.rep_bands(feat_reps, cfg))
+    bands = run("bands", band_table_dual(feat_reps, cfg))
     candidates = run(
         "candidates",
         blocking.within_candidates(feat_reps, bands, feat_slim, cfg)

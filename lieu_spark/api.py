@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, DedupeConfig
 from .operators.assemble import assemble_conversations
-from .operators.blocking import cross_candidates, rep_bands, tag_reps
+from .operators.blocking import cross_candidates, tag_reps
+from .operators.lsh import band_table_dual
 from .operators.verify import verify_pairs
 from .pipeline import PipelineResult, build_features, run_pipeline
 
@@ -82,9 +83,9 @@ def match(
     content = F.size("shingle_hashes") > 0
     cand = (
         cross_candidates(
-            rep_bands(canon_reps.filter(content), cfg),
+            band_table_dual(canon_reps.filter(content), cfg),
             canon_reps,
-            rep_bands(inc.filter(content), cfg),
+            band_table_dual(inc.filter(content), cfg),
             inc,
             cfg,
         )

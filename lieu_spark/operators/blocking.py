@@ -10,6 +10,9 @@ keys feed both a self-pairing (``dupe_sims``) and a cross-dataset
   * ``cross_candidates`` — standing vs incoming set: hot-capped band
     equi-join ∪ text_sha equi-join.
 
+Banding (lsh.band_table_dual) is a layer of its own — its output is the
+band state the stream and refresh store — so callers pass bands in.
+
 Rep-blocking closure argument: identical texts have identical shingles,
 so every member edge is implied by (rep edge + exact star edge) and is
 recovered exactly by connected components. Boilerplate-heavy corpora
@@ -34,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
 from .exact import exact_star_pairs
-from .lsh import band_table_dual, candidate_pairs, match_pairs
+from .lsh import candidate_pairs, match_pairs
 from .simhash_path import simhash_candidate_pairs
 
 
@@ -46,21 +49,13 @@ def tag_reps(features: DataFrame, extra_keys: Sequence[str] = ()) -> DataFrame:
     return features.withColumn("_rep", F.min("conv_id").over(w))
 
 
-def representatives(
-    features: DataFrame, extra_keys: Sequence[str] = ()
-) -> DataFrame:
+def representatives(features: DataFrame, extra_keys: Sequence[str] = ()) -> DataFrame:
     """The content-bearing rep row of each (text_sha, *extra_keys) group."""
     return (
         tag_reps(features.filter(F.size("shingle_hashes") > 0), extra_keys)
         .filter(F.col("conv_id") == F.col("_rep"))
         .drop("_rep")
     )
-
-
-def rep_bands(reps: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """(id, band, band_hash) over both gram families: the band state a
-    standing set stores and an incoming set is matched with."""
-    return band_table_dual(reps, cfg)
 
 
 def within_candidates(
@@ -71,11 +66,10 @@ def within_candidates(
     star: DataFrame | None = None,
 ) -> DataFrame:
     """Self-pairing inside one set -> (id_a, id_b, source), id_a < id_b:
-    LSH over ``bands`` (the reps' ``rep_bands``, which every caller also
-    stages or persists) ∪ ``star`` (default the exact star over
-    ``members``) ∪ SimHash over ``reps`` when cfg.with_simhash_path is
-    on and the reps carry a simhash column (the capability guard for
-    hand-built feature tables).
+    LSH over ``bands`` (lsh.band_table_dual of the reps, which every
+    caller also stages, persists or stores) ∪ ``star`` (default the
+    exact star over ``members``) ∪ SimHash over ``reps`` when
+    cfg.with_simhash_path is on.
 
     NOT deduplicated (distinct=False on both similarity families): every
     caller re-aggregates on (id_a, id_b) — the pipeline's source-tag
@@ -86,7 +80,7 @@ def within_candidates(
     merged = candidate_pairs(bands, cfg, distinct=False).withColumn(
         "source", F.lit("minhash_lsh")
     ).unionByName(star.withColumn("source", F.lit("exact_sha")))
-    if cfg.with_simhash_path and "simhash" in reps.columns:
+    if cfg.with_simhash_path:
         sim = simhash_candidate_pairs(reps, cfg, distinct=False)
         merged = merged.unionByName(
             sim.select("id_a", "id_b").withColumn("source", F.lit("simhash"))
@@ -111,11 +105,8 @@ def cross_candidates(
     is the micro-batch shape: the standing side never shuffles (see
     lsh.capped_group_join)."""
     lsh = match_pairs(
-        standing_bands,
-        incoming_bands,
-        cfg,
-        broadcast_incoming=broadcast_incoming,
-        hot_cap=cfg.hot_band_cap,
+        standing_bands, incoming_bands, cfg,
+        broadcast_incoming=broadcast_incoming, hot_cap=cfg.hot_band_cap,
     ).select(F.col("canonical_id").alias("standing_id"), "incoming_id")
     inc = incoming_shas.select(F.col("conv_id").alias("incoming_id"), "text_sha")
     if broadcast_incoming:

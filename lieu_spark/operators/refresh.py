@@ -64,7 +64,7 @@ re-derives the dedupe state from it).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -73,6 +73,7 @@ from pyspark.sql import functions as F
 from ..config import DedupeConfig
 from .cluster import clusters_with_singletons, connected_components
 from . import blocking
+from .lsh import band_table_dual
 from .simhash_path import simhash_match_pairs
 from .verify import dupe_pairs, verify_pairs
 
@@ -161,6 +162,9 @@ def refresh_dedupe(
         )
     if "text_sha" not in new_conversations.columns:
         raise ValueError("new_conversations must carry text_sha")
+    # the SimHash capability guard (docstring), resolved into cfg once
+    if "simhash" not in old_features.columns:
+        cfg = replace(cfg, with_simhash_path=False)
 
     # ---- CDC on (id, content hash) --------------------------------
     new_keys = new_conversations.select(idc, "text_sha")
@@ -281,7 +285,7 @@ def refresh_dedupe(
         .unionByName(promoted_feats.select(*cols))
         .localCheckpoint()
     )
-    incoming_bands = blocking.rep_bands(incoming_feats, cfg)
+    incoming_bands = band_table_dual(incoming_feats, cfg)
 
     # ---- candidates (operators/blocking.py) -----------------------
     # within the incoming set: LSH ∪ SimHash over the incoming reps ∪
@@ -304,8 +308,8 @@ def refresh_dedupe(
     ).select(*_pair(F.col("standing_id"), F.col("incoming_id")))
     cand = within.unionByName(cross).unionByName(star_repair)
     # SimHash across the snapshots: incoming reps vs the standing reps
-    # (the band state's ids); same capability guard as within_candidates
-    if cfg.with_simhash_path and "simhash" in old_features.columns:
+    # (the band state's ids)
+    if cfg.with_simhash_path:
         standing_rep_feats = old_features.join(
             standing_bands.select(F.col("id").alias(idc)).distinct(),
             idc,

@@ -132,22 +132,20 @@ def simhash_match_pairs(
     canonical: DataFrame,
     incoming: DataFrame,
     cfg: DedupeConfig,
-    id_col: str = "conv_id",
 ) -> DataFrame:
     """Cross-dataset twin of simhash_candidate_pairs (snapshot refresh:
     incoming reps vs standing reps) -> distinct (canonical_id,
     incoming_id) within cfg.simhash_hamming_max. Unsalted: the
     pigeonhole guarantee needs every chunk group whole."""
-    c = _chunk_rows(canonical, cfg, id_col).withColumnsRenamed(
-        {"id": "canonical_id", "simhash": "simhash_a"}
+    c = _chunk_rows(canonical, cfg, "conv_id").withColumnsRenamed(
+        {"id": "canonical_id", "simhash": "h_a"}
     )
-    i = _chunk_rows(incoming, cfg, id_col).withColumnsRenamed(
-        {"id": "incoming_id", "simhash": "simhash_b"}
+    i = _chunk_rows(incoming, cfg, "conv_id").withColumnsRenamed(
+        {"id": "incoming_id", "simhash": "h_b"}
     )
-    hamming = hamming64(F.col("simhash_a"), F.col("simhash_b"))
     return (
         c.join(i, ["chunk", "chunk_bits"])
-        .filter(hamming <= cfg.simhash_hamming_max)
+        .filter(hamming64(F.col("h_a"), F.col("h_b")) <= cfg.simhash_hamming_max)
         .select("canonical_id", "incoming_id")
         .dropDuplicates()
     )

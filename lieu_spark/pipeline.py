@@ -48,8 +48,8 @@ from .functions.text import (
 from .metrics import record_stage
 from .operators.assemble import assemble_conversations
 from .operators.cluster import clusters_with_singletons, connected_components
-from .operators.blocking import rep_bands, representatives, within_candidates
-from .operators.lsh import band_stats
+from .operators.blocking import representatives, within_candidates
+from .operators.lsh import band_stats, band_table_dual
 from .operators.spans import copied_spans, span_candidates, winnow_span_candidates
 from .operators.verify import dupe_pairs, verify_pairs
 
@@ -282,7 +282,7 @@ def run_pipeline(
         feat_reps = representatives(feat_slim)
         star = None
 
-    bands = stage("bands", lambda: rep_bands(feat_reps, cfg))
+    bands = stage("bands", lambda: band_table_dual(feat_reps, cfg))
     bstats = stage("band_stats", lambda: band_stats(bands, cfg))
 
     def build_candidates() -> DataFrame:

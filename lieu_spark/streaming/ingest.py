@@ -47,6 +47,7 @@ from ..config import DEFAULT_CONFIG, DedupeConfig
 from ..metrics import record_stages
 from ..operators.assemble import assemble_conversations
 from ..operators import blocking
+from ..operators.lsh import band_table_dual
 from ..operators.verify import verify_pairs
 from ..pipeline import build_features
 
@@ -469,7 +470,7 @@ class IncrementalDeduper:
         idempotence recipe as the feature fold)."""
         self._stamp_band_layout()
         (
-            blocking.rep_bands(feats, self.cfg)
+            band_table_dual(feats, self.cfg)
             .withColumn(
                 "bh_bucket",
                 F.pmod(F.col("band_hash"), F.lit(self._band_buckets())).cast("int"),
@@ -645,7 +646,7 @@ class IncrementalDeduper:
         feat_reps = blocking.representatives(feats)
         # persisted: three differently-pruned consumers (within-batch
         # LSH, the bucket-prune collect, the vs-index match)
-        feat_bands = blocking.rep_bands(feat_reps, self.cfg).persist()
+        feat_bands = band_table_dual(feat_reps, self.cfg).persist()
         within = blocking.within_candidates(
             feat_reps, feat_bands, feats, self.cfg
         ).select("id_a", "id_b")
