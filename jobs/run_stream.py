@@ -61,8 +61,9 @@ def main() -> None:
     )
     ap.add_argument(
         "--compact", action="store_true",
-        help="after draining, merge all-but-newest index/band batch "
-             "subdirs into one (keeps long-lived state at O(1) subdirs; "
+        help="after draining, merge all-but-newest batch subdirs of each "
+             "state kind (index, bands, shas) into one (keeps long-lived "
+             "state at O(1) subdirs; "
              "crash-safe, row-identical — streaming/ingest.compact_state)",
     )
     args = ap.parse_args()

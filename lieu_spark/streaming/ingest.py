@@ -24,7 +24,13 @@ band-hash bucket. Each micro-batch then:
     pre-derived bands, never a re-band (sig explode) of the index.
 Per-batch match cost is therefore O(batch) work + one pruned metadata-
 backed scan, not O(index) recompute — the per-batch walls stay flat as
-the index grows (tracked in bench.py's ``stream_batch_walls``).
+the index grows (tracked by perfbench's ``ingest.latency_growth``).
+
+State layer: a work_dir holds ``index/``, ``bands/`` and ``shas/`` (the
+per-batch state kinds of ``_STATE``, each defined once — how it derives
+from a batch's new uniques and how it is laid out on disk — for the
+fold, the backfill and ``compact_state``) and ``pairs/`` (the results
+log). ``IncrementalDeduper._state`` is the one loader of every kind.
 
 Candidates come from operators/blocking.py (see it for the rep-blocking
 closure argument). SimHash pairs WITHIN a micro-batch only: the stream
@@ -40,7 +46,9 @@ with watermarked late-data handling live in ``streaming/windows.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable, NamedTuple
+
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, DedupeConfig
@@ -121,6 +129,127 @@ def _batch_subdir_ids(spark: SparkSession, dir_str: str) -> list[int] | None:
     return ids
 
 
+def _bh_bucket(buckets: int):
+    """Band-hash bucket a band row is stored (and pruned) under."""
+    return F.pmod(F.col("band_hash"), F.lit(buckets)).cast("int")
+
+
+def _sha_layout(df: DataFrame) -> DataFrameWriter:
+    # range-partitioned + sorted: each file covers a contiguous sha
+    # range, so the cross-batch exact match's pushed In(text_sha, ...)
+    # skips files/row groups. Range partitioning, not coalesce(1): a
+    # large catch-up batch or an index-sized backfill must not funnel
+    # its whole sort+write through one task.
+    parts = max(df.sparkSession.sparkContext.defaultParallelism // 4, 1)
+    return (
+        df.repartitionByRange(parts, F.col("text_sha"))
+        .sortWithinPartitions("text_sha")
+        .write.mode("overwrite")
+    )
+
+
+class _Kind(NamedTuple):
+    """One per-batch state kind: how its rows derive from a batch's new
+    uniques (or, in a backfill, from an index batch) and the on-disk
+    layout every writer of it uses — fold, backfill and compaction."""
+
+    derive: Callable[["IncrementalDeduper", DataFrame], DataFrame]
+    layout: Callable[[DataFrame], DataFrameWriter]
+    # index columns a backfill derives from
+    needs: tuple[str, ...] = ()
+
+
+_STATE: dict[str, _Kind] = {
+    # the canonical feature index, sorted by conv_id so parquet min/max
+    # stats let a later batch's In(conv_id, ...) verify pushdown prune
+    # row groups
+    "index": _Kind(
+        derive=lambda ded, feats: feats,
+        layout=lambda df: df.sortWithinPartitions("conv_id").write.mode(
+            "overwrite"
+        ),
+    ),
+    # the DERIVED band table, partitioned by band-hash bucket so no later
+    # batch re-bands the index and a batch's match prunes to the buckets
+    # it touches. The dual-family columns are required: bands backfilled
+    # from a pre-dual-schema index would be family-untagged and silently
+    # lose char-family matches.
+    "bands": _Kind(
+        derive=lambda ded, feats: band_table_dual(feats, ded.cfg).withColumn(
+            "bh_bucket", _bh_bucket(ded._band_buckets())
+        ),
+        layout=lambda df: df.repartition(F.col("bh_bucket"))
+        .write.mode("overwrite")
+        .partitionBy("bh_bucket"),
+        needs=("alt_sig", "char_primary"),
+    ),
+    # the (conv_id, text_sha) projection the cross-batch exact match
+    # reads instead of scanning the wide feature index
+    "shas": _Kind(
+        derive=lambda ded, feats: feats.select("conv_id", "text_sha"),
+        layout=_sha_layout,
+    ),
+}
+
+
+def _pruned(stored: DataFrame, col: str, keys: DataFrame, cap: int) -> DataFrame:
+    """``stored`` restricted to the rows whose ``col`` is one of the
+    batch-side ``keys``: a bounded collect (at most ``cap`` distinct
+    keys) pushed into the scan as ``isin`` — partition pruning on a
+    partition column, row-group pruning on a sorted one. Past the cap
+    the plain join stands. Parity-exact either way: a stored row whose
+    key the batch side lacks cannot join."""
+    got = [r[0] for r in keys.distinct().limit(cap + 1).collect()]
+    if len(got) > cap:
+        return stored
+    return stored.filter(F.col(col).isin(got))
+
+
+def _check_config_marker(
+    spark: SparkSession, work_dir: str, cfg: DedupeConfig, stamp: bool = False
+) -> None:
+    """The work_dir's config guard (the streaming twin of
+    checkpoint.StageStore's fingerprint invalidation).
+    ``{work_dir}/_config_marker`` holds the fingerprint of the config
+    that built the state; a different config refuses — folding, say,
+    k=7 shingle features into a k=5 index (or backfilling bands with
+    them) would silently corrupt every later match. A missing marker is
+    stamped with ``cfg`` when ``stamp`` (a stream's first run)."""
+    import json as _json
+
+    # marker I/O goes through Spark's Hadoop filesystem (a one-line text
+    # "directory file"), NOT driver-local open(): a work_dir on
+    # hdfs:// or s3:// must hit the same store as the state it guards —
+    # a local-path marker would silently no-op the guard for remote dirs
+    marker = f"{work_dir}/_config_marker"
+    fp = cfg.fingerprint()
+    if not _path_exists(spark, marker):
+        if stamp:
+            spark.createDataFrame(
+                [(_json.dumps({"fingerprint": fp}),)], "value string"
+            ).coalesce(1).write.mode("overwrite").text(marker)
+        return
+    lines = [r.value for r in spark.read.text(marker).collect()]
+    try:
+        stored = _json.loads("".join(lines))["fingerprint"]
+    except (ValueError, KeyError):
+        # a corrupt marker next to existing state must NOT be silently
+        # re-stamped with the CURRENT config — that is the exact
+        # corruption the guard exists to refuse
+        raise ValueError(
+            f"config marker {marker} is unreadable; refusing to guess "
+            "which config built this work_dir. Restore the marker or "
+            "start a fresh work_dir."
+        )
+    if stored != fp:
+        raise ValueError(
+            f"work_dir {work_dir} was built with config fingerprint "
+            f"{stored}; the given config is {fp}. Mixing them would "
+            "corrupt the index — use a fresh work_dir (or delete this "
+            "one) to change config."
+        )
+
+
 COMPACT_TMP = "_compacting"
 
 
@@ -169,34 +298,14 @@ def _finish_compaction(spark: SparkSession, state_dir: str) -> bool:
     return True
 
 
-def _resolve_state_dirs(spark: SparkSession, work_dir: str) -> dict[str, str]:
-    """Map state kinds to their directories, honoring BOTH layouts:
-    run_stream's ``{work_dir}/{bands,shas}`` and IncrementalDeduper's
-    constructor defaults ``{index_dir}_bands`` / ``{index_dir}_shas``.
-    Existence decides (the legacy suffix layout wins only when the
-    run_stream dir is absent and it is present) — compacting the wrong
-    path would silently no-op the kind while still compacting the index,
-    leaving band/sha batch ids out of sync with the merged index."""
-    index_dir = f"{work_dir}/index"
-    dirs = {"index": index_dir}
-    for kind, suffix in (("bands", "_bands"), ("shas", "_shas")):
-        primary = f"{work_dir}/{kind}"
-        legacy = f"{index_dir}{suffix}"
-        if not _path_exists(spark, primary) and _path_exists(spark, legacy):
-            dirs[kind] = legacy
-        else:
-            dirs[kind] = primary
-    return dirs
-
-
 def compact_state(
     spark: SparkSession,
     work_dir: str,
     keep_last: int = 1,
     cfg: DedupeConfig | None = None,
 ) -> dict:
-    """Merge all but the newest ``keep_last`` batch subdirectories of the
-    index and band state into ONE subdir each (labeled with the highest
+    """Merge all but the newest ``keep_last`` batch subdirectories of
+    each state kind into ONE subdir each (labeled with the highest
     merged batch id, so every `batch_id < N` read is unchanged).
 
     Why: per-batch subdirs are the idempotence unit, but a long-lived
@@ -204,15 +313,14 @@ def compact_state(
     listStatus and partition discovery that make per-batch reads cheap
     become the bottleneck themselves. Periodic compaction keeps the
     subdir count O(1) while preserving exact semantics: the merged data
-    is the union of the merged subdirs (row-identical), the newest
-    ``keep_last`` batches stay un-merged because only the newest batch
-    can be replayed by the at-least-once checkpoint, and the index is
-    rewritten clustered+sorted by conv_id so the verify-side
-    In(conv_id, ...) pushdown prunes even better than against the raw
-    fold. Crash-safe: data lands in a tmp dir first, the manifest is
-    the commit point, and readers auto-heal a half-finished swap
-    (_finish_compaction). Pairs subdirs are NOT compacted — they are a
-    results log with per-batch provenance, not matcher state.
+    is the union of the merged subdirs (row-identical, written in the
+    kind's one layout), and the newest ``keep_last`` batches stay
+    un-merged because only the newest batch can be replayed by the
+    at-least-once checkpoint. Crash-safe: data lands in a tmp dir
+    first, the manifest is the commit point, and readers auto-heal a
+    half-finished swap (_finish_compaction). Pairs subdirs are NOT
+    compacted — they are a results log with per-batch provenance, not
+    matcher state.
 
     Run this with the stream STOPPED (the --compact CLI flag runs it
     after an availableNow drain): crash-recovery covers a compactor
@@ -222,16 +330,16 @@ def compact_state(
     non-transactional parquet layout (an Iceberg-backed deployment
     gets this atomicity from the table format instead).
 
-    Holes first: any index batch missing its band/sha subdir (the
-    crash/surgery cases _band_state and _sha_state backfill) is
-    backfilled BEFORE merging — merging around a hole would bake it
-    into state permanently, because afterwards the per-kind batch ids
-    line up again and the backfill can never detect the missing rows
-    (silent recall loss for every doc in the lost subdir). Sha backfill
-    is a pure projection; band backfill derives bands and therefore
-    needs the stream's ``cfg`` — required only when a band hole
-    actually exists, and checked against the work_dir's config marker
-    so a wrong config can't corrupt the store."""
+    Holes first: any index batch missing its band/sha subdir is
+    backfilled (``IncrementalDeduper._state``) BEFORE merging — merging
+    around a hole would bake it into state permanently, because
+    afterwards the per-kind batch ids line up again and the backfill can
+    never detect the missing rows (silent recall loss for every doc in
+    the lost subdir). Sha backfill is a pure projection; band backfill
+    derives bands and therefore needs the stream's ``cfg`` — required
+    only when a band hole actually exists, and checked against the
+    work_dir's config marker so a wrong config can't corrupt the
+    store."""
     import json as _json
 
     if keep_last < 1:
@@ -244,46 +352,30 @@ def compact_state(
     out: dict = {}
     fs, _ = _hadoop_fs(spark, work_dir)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    dirs = _resolve_state_dirs(spark, work_dir)
-    for state_dir in dirs.values():
-        _finish_compaction(spark, state_dir)
-    index_ids = _batch_subdir_ids(spark, dirs["index"]) or []
+    ded = IncrementalDeduper(spark, work_dir, cfg or DEFAULT_CONFIG)
+    for kind in _STATE:
+        _finish_compaction(spark, ded._dir(kind))
+    index_ids = _batch_subdir_ids(spark, ded._dir("index")) or []
     if index_ids:
         after_newest = max(index_ids) + 1
-        ded = IncrementalDeduper(
-            spark,
-            dirs["index"],
-            f"{work_dir}/pairs",
-            cfg or DEFAULT_CONFIG,
-            bands_dir=dirs["bands"],
-            shas_dir=dirs["shas"],
-        )
         # sha backfill: exact projection of the index, config-free
-        ded._sha_state(before_batch=after_newest)
+        ded._state("shas", before_batch=after_newest)
         band_holes = set(index_ids) - set(
-            _batch_subdir_ids(spark, dirs["bands"]) or []
+            _batch_subdir_ids(spark, ded._dir("bands")) or []
         )
         if band_holes:
             if cfg is None:
                 raise ValueError(
-                    f"band state at {dirs['bands']} is missing subdirs for "
-                    f"index batches {sorted(band_holes)}; backfilling them "
-                    "derives bands and needs the stream's DedupeConfig — "
-                    "pass cfg= (merging around the hole would bake it in)"
+                    f"band state at {ded._dir('bands')} is missing subdirs "
+                    f"for index batches {sorted(band_holes)}; backfilling "
+                    "them derives bands and needs the stream's "
+                    "DedupeConfig — pass cfg= (merging around the hole "
+                    "would bake it in)"
                 )
-            marker = f"{work_dir}/_config_marker"
-            if _path_exists(spark, marker):
-                lines = [r.value for r in spark.read.text(marker).collect()]
-                stored = _json.loads("".join(lines))["fingerprint"]
-                if stored != cfg.fingerprint():
-                    raise ValueError(
-                        f"work_dir {work_dir} was built with config "
-                        f"fingerprint {stored}; backfilling bands with the "
-                        f"given config ({cfg.fingerprint()}) would corrupt "
-                        "the store"
-                    )
-            ded._band_state(before_batch=after_newest)
-    for kind, state_dir in dirs.items():
+            _check_config_marker(spark, work_dir, cfg)
+            ded._state("bands", before_batch=after_newest)
+    for kind, spec in _STATE.items():
+        state_dir = ded._dir(kind)
         ids = sorted(_batch_subdir_ids(spark, state_dir) or [])
         if len(ids) - keep_last < 2:
             out[kind] = {"merged": 0}
@@ -295,37 +387,17 @@ def compact_state(
             .filter(F.col("batch_id").isin(merge))
             .drop("batch_id")
         )
+        if kind == "index":
+            # the merged index is also clustered by conv_id, so the
+            # verify-side In(conv_id, ...) pushdown prunes even better
+            # than against the raw per-batch folds
+            df = df.repartition(
+                max(spark.sparkContext.defaultParallelism, 1), F.col("conv_id")
+            )
         tmp = f"{state_dir}/{COMPACT_TMP}"
         if _path_exists(spark, tmp):
             fs.delete(jvm_path(tmp), True)
-        if kind == "index":
-            (
-                df.repartition(
-                    max(spark.sparkContext.defaultParallelism, 1), F.col("conv_id")
-                )
-                .sortWithinPartitions("conv_id")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-        elif kind == "shas":
-            # range-partitioned + sorted: each file covers a contiguous
-            # sha range, so the In(text_sha, ...) pushdown skips files
-            (
-                df.repartitionByRange(
-                    max(spark.sparkContext.defaultParallelism // 4, 1),
-                    F.col("text_sha"),
-                )
-                .sortWithinPartitions("text_sha")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-        else:
-            (
-                df.repartition(F.col("bh_bucket"))
-                .write.mode("overwrite")
-                .partitionBy("bh_bucket")
-                .parquet(tmp)
-            )
+        spec.layout(df).parquet(tmp)
         _fs_write_text(
             spark,
             f"{tmp}/_MANIFEST.txt",
@@ -339,18 +411,15 @@ def compact_state(
 class IncrementalDeduper:
     """foreachBatch handler: match each micro-batch against the canonical
     index, append verified pairs, fold new uniques (and their derived
-    band table) into the per-batch state."""
+    state kinds) into the per-batch state under ``work_dir``."""
 
     def __init__(
         self,
         spark: SparkSession,
-        index_dir: str,
-        pairs_dir: str,
+        work_dir: str,
         cfg: DedupeConfig = DEFAULT_CONFIG,
         metrics_dir: str | None = None,
         run_id: str = "stream",
-        bands_dir: str | None = None,
-        shas_dir: str | None = None,
     ) -> None:
         if cfg.asymmetry_field is not None or cfg.revision_field is not None:
             raise ValueError(
@@ -363,65 +432,99 @@ class IncrementalDeduper:
                 "pipeline for aux-enabled configs."
             )
         self.spark = spark
-        self.index_dir = index_dir
-        self.pairs_dir = pairs_dir
-        self.bands_dir = bands_dir or f"{index_dir}_bands"
-        self.shas_dir = shas_dir or f"{index_dir}_shas"
+        self.work_dir = work_dir
         self.cfg = cfg
         self.metrics_dir = metrics_dir
         self.run_id = run_id
 
-    def _newest_state_batch(self) -> int | None:
-        """Newest batch id present in state, from directory metadata.
-        Consults BOTH index and pairs dirs: a batch always writes its
-        pairs subdir, so pairs covers the zero-new-uniques case."""
-        newest: int | None = None
-        for d in (self.index_dir, self.pairs_dir):
-            ids = _batch_subdir_ids(self.spark, d)
-            if ids:
-                top = max(ids)
-                newest = top if newest is None else max(newest, top)
-        return newest
+    def _dir(self, kind: str) -> str:
+        """Directory of a state kind (or of ``pairs``)."""
+        return f"{self.work_dir}/{kind}"
 
-    def _load_index(self, before_batch: int) -> DataFrame | None:
-        """Canonical feature index as of the start of ``before_batch``:
-        the union of batch subdirectories with batch_id < before_batch.
-
-        Per-batch subdirs + the strict < filter make replays
-        deterministic: if a batch partially wrote its own index subdir
-        before a failure, the rerun neither matches the batch against
-        its own half-written output nor double-counts it — the replay
-        sees exactly the pre-batch state and OVERWRITES its own subdir.
-
-        Failure modes are distinguished from fresh state, not collapsed
-        into it: a flat (pre-upgrade) layout raises in
-        ``_batch_subdir_ids``, and an index containing batch ids NEWER
-        than the current batch means the stream checkpoint was lost or
-        re-pointed — batch ids restarted — and proceeding would
-        OVERWRITE old state subdir by subdir."""
-        # auto-heal a half-finished compaction swap before ANY state
-        # read — the tmp dir holds the full merged data, so completion
-        # is deterministic (see _finish_compaction)
-        _finish_compaction(self.spark, self.index_dir)
-        _finish_compaction(self.spark, self.bands_dir)
-        _finish_compaction(self.spark, self.shas_dir)
-        newest = self._newest_state_batch()
-        if newest is not None and newest > before_batch:
+    def _refuse_restarted_batch_ids(self, batch_id: int) -> None:
+        """A batch id NEWER than the one being processed in the index or
+        pairs dir means the stream checkpoint was lost or re-pointed —
+        batch ids restarted — and proceeding would OVERWRITE old state
+        subdir by subdir. Both dirs are consulted, from directory
+        metadata: a batch always writes its pairs subdir, so pairs
+        covers the zero-new-uniques case."""
+        ids = [
+            i
+            for d in ("index", "pairs")
+            for i in _batch_subdir_ids(self.spark, self._dir(d)) or []
+        ]
+        if ids and max(ids) > batch_id:
             raise ValueError(
-                f"stream state at {self.index_dir} already contains "
-                f"batch {newest} but the stream is processing batch "
-                f"{before_batch} — the streaming checkpoint was lost or "
+                f"stream state at {self.work_dir} already contains "
+                f"batch {max(ids)} but the stream is processing batch "
+                f"{batch_id} — the streaming checkpoint was lost or "
                 "re-pointed and batch ids restarted. Proceeding would "
                 "overwrite existing state; restore the original "
                 "checkpoint or start a fresh work_dir."
             )
-        ids = _batch_subdir_ids(self.spark, self.index_dir)
-        if not ids or not any(i < before_batch for i in ids):
+
+    def _state(self, kind: str, before_batch: int) -> DataFrame | None:
+        """State of one kind as of the start of ``before_batch``: the
+        union of its batch subdirectories with batch_id < before_batch
+        (None before the first index fold).
+
+        Per-batch subdirs + the strict < filter make replays
+        deterministic: if a batch partially wrote its own subdir before
+        a failure, the rerun neither matches the batch against its own
+        half-written output nor double-counts it — the replay sees
+        exactly the pre-batch state and OVERWRITES its own subdir.
+
+        Before the read, a half-finished compaction swap of the kind is
+        completed (the tmp dir holds the full merged data, see
+        _finish_compaction), and any index batch missing its subdir of a
+        derived kind (manual state surgery, a crash between the index
+        write and the other folds of a batch that was then never
+        replayed) is backfilled from the index — derivation is
+        deterministic, so backfill reproduces exactly what the fold
+        would have written. An index batch lacking the columns the kind
+        derives from (``_Kind.needs``) was written by an older schema
+        and is refused loudly instead (such state is already
+        unresumable — the config fingerprint changed — and must be
+        rebuilt by replaying the landing directory)."""
+        _finish_compaction(self.spark, self._dir(kind))
+        index_dir = self._dir("index")
+        prior = [
+            i
+            for i in _batch_subdir_ids(self.spark, index_dir) or []
+            if i < before_batch
+        ]
+        if kind != "index":
+            have = set(_batch_subdir_ids(self.spark, self._dir(kind)) or [])
+            for i in sorted(set(prior) - have):
+                feats = self.spark.read.parquet(f"{index_dir}/batch_id={i}")
+                missing = set(_STATE[kind].needs) - set(feats.columns)
+                if missing:
+                    raise ValueError(
+                        f"index batch {i} at {index_dir} lacks the feature "
+                        f"columns {sorted(missing)} its {kind} derive from "
+                        "— it was written by a pre-dual-schema build and "
+                        "cannot be backfilled safely. Rebuild the stream "
+                        "state in a fresh work_dir (replaying the landing "
+                        "directory reproduces it)."
+                    )
+                self._fold(kind, feats, i)
+        if not prior:
             return None
         return (
-            self.spark.read.parquet(self.index_dir)
+            self.spark.read.parquet(self._dir(kind))
             .filter(F.col("batch_id") < before_batch)
             .drop("batch_id")
+        )
+
+    def _fold(self, kind: str, feats: DataFrame, batch_id: int) -> None:
+        """Write one state kind's rows of a batch to the batch's own
+        subdir, in the kind's layout (mode=overwrite: a replay replaces
+        its own output)."""
+        if kind == "bands":
+            self._stamp_band_layout()
+        spec = _STATE[kind]
+        spec.layout(spec.derive(self, feats)).parquet(
+            f"{self._dir(kind)}/batch_id={batch_id}"
         )
 
     def _band_buckets(self) -> int:
@@ -435,162 +538,33 @@ class IncrementalDeduper:
 
         if getattr(self, "_band_buckets_cached", None) is not None:
             return self._band_buckets_cached
-        marker = f"{self.bands_dir}/_layout.json"
+        marker = f"{self._dir('bands')}/_layout.json"
         if _path_exists(self.spark, marker):
             buckets = int(_json.loads(_fs_read_text(self.spark, marker))["band_buckets"])
         else:
             # infer WITHOUT writing: this accessor also serves read-only
             # paths (pruning, diagnostics against a store another writer
             # owns) and a reader must not mutate state under the
-            # single-writer contract — the marker is stamped by
-            # _write_bands (the write path) only
-            legacy = _batch_subdir_ids(self.spark, self.bands_dir)
+            # single-writer contract — the marker is stamped by the
+            # band fold (the write path) only
+            legacy = _batch_subdir_ids(self.spark, self._dir("bands"))
             buckets = 64 if legacy else BAND_BUCKETS
         self._band_buckets_cached = buckets
         return buckets
 
     def _stamp_band_layout(self) -> None:
         """Persist the band store's partitioning modulus (write path
-        only — called from _write_bands before the first fold so every
-        later reader prunes with the modulus the directory names were
-        actually written with)."""
+        only — called by the band fold so every later reader prunes with
+        the modulus the directory names were actually written with)."""
         import json as _json
 
-        marker = f"{self.bands_dir}/_layout.json"
+        marker = f"{self._dir('bands')}/_layout.json"
         if not _path_exists(self.spark, marker):
             _fs_write_text(
                 self.spark,
                 marker,
                 _json.dumps({"band_buckets": self._band_buckets()}),
             )
-
-    def _write_bands(self, feats: DataFrame, batch_id: int) -> None:
-        """Fold the batch's derived band table into per-batch state,
-        partitioned by band-hash bucket (same overwrite-own-subdir
-        idempotence recipe as the feature fold)."""
-        self._stamp_band_layout()
-        (
-            band_table_dual(feats, self.cfg)
-            .withColumn(
-                "bh_bucket",
-                F.pmod(F.col("band_hash"), F.lit(self._band_buckets())).cast("int"),
-            )
-            .repartition(F.col("bh_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bh_bucket")
-            .parquet(f"{self.bands_dir}/batch_id={batch_id}")
-        )
-
-    def _band_state(self, before_batch: int) -> DataFrame | None:
-        """Stored band table as of the start of ``before_batch``.
-
-        Any index batch missing its band subdir (manual state surgery, a
-        crash in the window between the index write and the band fold of
-        a batch that was then never replayed) is backfilled here — band
-        derivation is deterministic, so backfill reproduces exactly what
-        the fold would have written. Backfill REQUIRES the dual-family
-        feature schema: an index written by a pre-dual build would
-        backfill family-untagged bands and silently lose char-family
-        matches, so it is refused loudly instead (such state is already
-        unresumable — the config fingerprint changed — and must be
-        rebuilt by replaying the landing directory)."""
-        band_ids = set(_batch_subdir_ids(self.spark, self.bands_dir) or [])
-        index_ids = _batch_subdir_ids(self.spark, self.index_dir) or []
-        prior = [i for i in index_ids if i < before_batch]
-        for i in sorted(set(prior) - band_ids):
-            feats = self.spark.read.parquet(f"{self.index_dir}/batch_id={i}")
-            missing = {"alt_sig", "char_primary"} - set(feats.columns)
-            if missing:
-                raise ValueError(
-                    f"index batch {i} at {self.index_dir} lacks the dual-"
-                    f"family feature columns {sorted(missing)} — it was "
-                    "written by a pre-dual-schema build and cannot be "
-                    "band-backfilled safely. Rebuild the stream state in "
-                    "a fresh work_dir (replaying the landing directory "
-                    "reproduces it)."
-                )
-            self._write_bands(feats, i)
-        if not prior:
-            return None
-        return (
-            self.spark.read.parquet(self.bands_dir)
-            .filter(F.col("batch_id") < before_batch)
-            .drop("batch_id")
-        )
-
-    def _write_shas(self, feats: DataFrame, batch_id: int) -> None:
-        """Fold the batch's (conv_id, text_sha) projection into per-batch
-        state, range-partitioned + sorted by text_sha — each file covers
-        a contiguous sha range, so the cross-batch exact match's pushed
-        In(text_sha, ...) predicate skips files/row groups instead of
-        scanning the full feature index. Range partitioning (not
-        coalesce(1)): a large catch-up batch or an index-sized backfill
-        must not funnel its whole sort+write through one task."""
-        parts = max(self.spark.sparkContext.defaultParallelism // 4, 1)
-        (
-            feats.select("conv_id", "text_sha")
-            .repartitionByRange(parts, F.col("text_sha"))
-            .sortWithinPartitions("text_sha")
-            .write.mode("overwrite")
-            .parquet(f"{self.shas_dir}/batch_id={batch_id}")
-        )
-
-    def _sha_state(self, before_batch: int) -> DataFrame | None:
-        """Stored (conv_id, text_sha) table as of ``before_batch``;
-        a missing sha subdir (same crash/surgery cases as _band_state)
-        is backfilled from the feature index — the projection is exact,
-        so backfill reproduces the fold bit-for-bit."""
-        sha_ids = set(_batch_subdir_ids(self.spark, self.shas_dir) or [])
-        index_ids = _batch_subdir_ids(self.spark, self.index_dir) or []
-        prior = [i for i in index_ids if i < before_batch]
-        for i in sorted(set(prior) - sha_ids):
-            self._write_shas(
-                self.spark.read.parquet(f"{self.index_dir}/batch_id={i}"), i
-            )
-        if not prior:
-            return None
-        return (
-            self.spark.read.parquet(self.shas_dir)
-            .filter(F.col("batch_id") < before_batch)
-            .drop("batch_id")
-        )
-
-    def _pruned_shas(self, stored_shas: DataFrame, feats: DataFrame) -> DataFrame:
-        """Prune the stored sha table to the batch's own shas: a bounded
-        collect of the batch's distinct text_shas (micro-batch-sized)
-        pushed as In(text_sha, ...) — row groups of the sha-sorted fold
-        skip. Past the cap the plain join stands (a matching stored row
-        must share text_sha with some batch row, so pruning is
-        parity-exact)."""
-        shas = [
-            r[0]
-            for r in feats.select("text_sha")
-            .distinct()
-            .limit(VERIFY_ID_CAP + 1)
-            .collect()
-        ]
-        if len(shas) > VERIFY_ID_CAP:
-            return stored_shas
-        return stored_shas.filter(F.col("text_sha").isin(shas))
-
-    def _bounded_index(self, index: DataFrame, cand: DataFrame) -> DataFrame:
-        """Index features restricted to the ids verification can touch
-        (cand's id_a side — id_b is always batch-local). A bounded
-        collect (≤ VERIFY_ID_CAP + 1, over the PERSISTED candidate set)
-        turns the restriction into a pushed In(conv_id, ...) predicate,
-        so the scan of the wide feature columns row-group-prunes against
-        the sorted per-batch fold; past the cap the plain full join
-        stands (parity-exact either way — dropped rows cannot join)."""
-        ids = [
-            r[0]
-            for r in cand.select("id_a")
-            .distinct()
-            .limit(VERIFY_ID_CAP + 1)
-            .collect()
-        ]
-        if len(ids) > VERIFY_ID_CAP:
-            return index
-        return index.filter(F.col("conv_id").isin(ids))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Candidates (operators/blocking.py) = within-batch self-pairs
@@ -609,17 +583,16 @@ class IncrementalDeduper:
         micro-batch is small) against the stored, pre-derived band
         state pruned to the batch's own band-hash buckets: no sig
         explode over the index, no shuffle of the stored side. The
-        verify-side feature fetch is bounded to the candidate ids
-        (_bounded_index: a pushed In(conv_id,...) predicate that
-        row-group-prunes the wide columns against the sorted fold).
-        The cross-batch exact match reads a dedicated sha-sorted
-        (conv_id, text_sha) fold pruned to the batch's own shas
-        (_pruned_shas) — so EVERY per-batch touch of the canonical
-        state is pruned or bounded; nothing scales with raw index size
-        except the (skippable) row groups themselves.
+        verify-side feature fetch is bounded to the candidate ids (a
+        pushed In(conv_id,...) predicate that row-group-prunes the wide
+        columns against the sorted fold). The cross-batch exact match
+        reads a dedicated sha-sorted (conv_id, text_sha) fold pruned to
+        the batch's own shas — so EVERY per-batch touch of the canonical
+        state is pruned or bounded (``_pruned``); nothing scales with
+        raw index size except the (skippable) row groups themselves.
 
-        Exactly-once state under at-least-once foreachBatch: pairs,
-        index fold, and band fold are written to per-batch
+        Exactly-once state under at-least-once foreachBatch: pairs and
+        the state folds are written to per-batch
         subdirectories with mode=overwrite — a checkpoint replay of the
         same deterministic batch overwrites its own output instead of
         appending a second copy (the standard foreachBatch idempotence
@@ -650,23 +623,32 @@ class IncrementalDeduper:
         within = blocking.within_candidates(
             feat_reps, feat_bands, feats, self.cfg
         ).select("id_a", "id_b")
-        index = self._load_index(before_batch=batch_id)
+        self._refuse_restarted_batch_ids(batch_id)
+        index = self._state("index", before_batch=batch_id)
         if index is not None:
             # state loads stay serial (they can backfill/write); the two
-            # PRUNE helpers each run a bounded read-only collect (the
-            # batch's touched buckets / the batch's distinct shas) —
-            # independent jobs, so they run concurrently and the shorter
-            # one hides inside the longer (the fold-write rule applied
-            # to the match phase's driver round-trips)
-            stored_bands = self._band_state(before_batch=batch_id)
-            stored_shas = self._sha_state(before_batch=batch_id)
+            # prunes each run a bounded read-only collect (the batch's
+            # touched buckets / the batch's distinct shas) — independent
+            # jobs, so they run concurrently and the shorter one hides
+            # inside the longer (the fold-write rule applied to the
+            # match phase's driver round-trips). The bucket prune reads
+            # the STORE's modulus, never the module constant: pruning
+            # with another modulus than the directory names were
+            # written with would silently drop true matches.
+            stored_bands = self._state("bands", before_batch=batch_id)
+            stored_shas = self._state("shas", before_batch=batch_id)
+            mod = self._band_buckets()
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fut_bands = pool.submit(
-                    self._prune_buckets, stored_bands, feat_bands
+                    _pruned, stored_bands, "bh_bucket",
+                    feat_bands.select(_bh_bucket(mod)), mod - 1,
                 )
-                fut_shas = pool.submit(self._pruned_shas, stored_shas, feats)
+                fut_shas = pool.submit(
+                    _pruned, stored_shas, "text_sha",
+                    feats.select("text_sha"), VERIFY_ID_CAP,
+                )
                 pruned_bands = fut_bands.result()
                 pruned_shas = fut_shas.result()
             cross = blocking.cross_candidates(
@@ -693,7 +675,9 @@ class IncrementalDeduper:
             # the WIDE columns (shingle sets) via the min/max stats the
             # sorted fold below guarantees. Past the cap, fall back to
             # the plain join (AQE broadcasts the candidate side).
-            all_feats = self._bounded_index(index, cand).unionByName(feats)
+            all_feats = _pruned(
+                index, "conv_id", cand.select("id_a"), VERIFY_ID_CAP
+            ).unionByName(feats)
         else:
             cand = within.dropDuplicates(["id_a", "id_b"]).persist()
             all_feats = feats
@@ -704,7 +688,7 @@ class IncrementalDeduper:
             cand, all_feats, self.cfg, method="stream_match"
         ).persist()
         verified.write.mode("overwrite").parquet(
-            f"{self.pairs_dir}/batch_id={batch_id}"
+            f"{self._dir('pairs')}/batch_id={batch_id}"
         )
         # sub-stage attribution: everything up to the pairs write is the
         # MATCH phase (assemble/features/banding/state-pruned joins/
@@ -727,11 +711,9 @@ class IncrementalDeduper:
         # run concurrently, and racing jobs over an unmaterialized cache
         # would each recompute the anti-join instead of reading it
         new_uniques.count()
-        # S8 parity: fold this batch's uniques into the canonical index
-        # (sorted within partitions by conv_id so parquet min/max stats
-        # make later batches' In(conv_id, ...) verify pushdown prune row
-        # groups), then fold their DERIVED band table (same subdir
-        # recipe) so no later batch ever re-bands the index.
+        # S8 parity: fold this batch's uniques into every state kind —
+        # the canonical index and its DERIVED band and sha tables, so no
+        # later batch ever re-bands or re-scans the index (_STATE).
         # The three fold writes are INDEPENDENT jobs over the persisted
         # new_uniques (different output dirs, no cross-reads), so they
         # run from a small thread pool — the scheduler back-fills the
@@ -742,16 +724,10 @@ class IncrementalDeduper:
         # replays (per-batch overwrite idempotence).
         from concurrent.futures import ThreadPoolExecutor
 
-        def _fold_index() -> None:
-            new_uniques.sortWithinPartitions("conv_id").write.mode(
-                "overwrite"
-            ).parquet(f"{self.index_dir}/batch_id={batch_id}")
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=len(_STATE)) as pool:
             futs = [
-                pool.submit(_fold_index),
-                pool.submit(self._write_bands, new_uniques, batch_id),
-                pool.submit(self._write_shas, new_uniques, batch_id),
+                pool.submit(self._fold, kind, new_uniques, batch_id)
+                for kind in _STATE
             ]
             for f in futs:
                 f.result()
@@ -790,34 +766,6 @@ class IncrementalDeduper:
         feat_bands.unpersist()
         feats.unpersist()
 
-    def _prune_buckets(
-        self, stored_bands: DataFrame, feat_bands: DataFrame
-    ) -> DataFrame:
-        """Partition-prune the stored band state to the band-hash
-        buckets the micro-batch actually touches. A matching stored row
-        shares band_hash with some incoming row, hence its bucket —
-        filtered rows cannot match, so pruning is parity-exact. The
-        bucket list is a bounded collect (≤ the store's modulus) over
-        the micro-batch's own bands; with the listed values in an
-        ``isin`` predicate on the partition column, Spark skips the
-        untouched bucket directories entirely — the trickle-batch case
-        reads a fraction of the stored state. The modulus comes from
-        the STORE's layout marker, never the module constant — pruning
-        with a different modulus than the directory names were written
-        with would silently drop true matches."""
-        mod = self._band_buckets()
-        buckets = sorted(
-            r[0]
-            for r in feat_bands.select(
-                F.pmod(F.col("band_hash"), F.lit(mod)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        if len(buckets) >= mod:
-            return stored_bands
-        return stored_bands.filter(F.col("bh_bucket").isin(buckets))
-
 
 def run_stream(
     spark: SparkSession,
@@ -831,51 +779,12 @@ def run_stream(
     """Wire the stream; with available_now=True drains what's on disk and
     stops (test mode / catch-up mode).
 
-    Config guard (the streaming twin of checkpoint.StageStore's
-    fingerprint invalidation): the first run stamps
-    ``work_dir/_config.json`` with the config fingerprint; a rerun with
-    a different config refuses to resume — folding, say, k=7 shingle
-    features into a k=5 index would silently corrupt every subsequent
-    match. Start a fresh work_dir (or delete the old one) to change
-    config."""
-    import json as _json
-
-    # marker I/O goes through Spark's Hadoop filesystem (a one-line text
-    # "directory file"), NOT driver-local open(): a work_dir on
-    # hdfs:// or s3:// must hit the same store as the state it guards —
-    # a local-path marker would silently no-op the guard for remote dirs
-    marker = f"{work_dir}/_config_marker"
-    fp = cfg.fingerprint()
-    if _path_exists(spark, marker):
-        lines = [r.value for r in spark.read.text(marker).collect()]
-        try:
-            stored = _json.loads("".join(lines))["fingerprint"]
-        except (ValueError, KeyError):
-            # a corrupt marker next to existing state must NOT be
-            # silently re-stamped with the CURRENT config — that is the
-            # exact corruption the guard exists to refuse
-            raise ValueError(
-                f"config marker {marker} is unreadable; refusing to "
-                "guess which config built this work_dir. Restore the "
-                "marker or start a fresh work_dir."
-            )
-        if stored != fp:
-            raise ValueError(
-                f"work_dir {work_dir} was built with config fingerprint "
-                f"{stored}; current config is {fp}. Resuming would mix "
-                "incompatible features into one index — use a fresh "
-                "work_dir (or delete this one) to change config."
-            )
-    else:
-        spark.createDataFrame(
-            [(_json.dumps({"fingerprint": fp}),)], "value string"
-        ).coalesce(1).write.mode("overwrite").text(marker)
-
-    dedupe = IncrementalDeduper(
-        spark, f"{work_dir}/index", f"{work_dir}/pairs", cfg,
-        metrics_dir=metrics_dir, bands_dir=f"{work_dir}/bands",
-        shas_dir=f"{work_dir}/shas",
-    )
+    The first run stamps the work_dir's config marker with the config
+    fingerprint; a rerun with a different config refuses to resume
+    (_check_config_marker). Start a fresh work_dir (or delete the old
+    one) to change config."""
+    _check_config_marker(spark, work_dir, cfg, stamp=True)
+    dedupe = IncrementalDeduper(spark, work_dir, cfg, metrics_dir=metrics_dir)
     stream = stream_transcripts(spark, input_dir, files_per_trigger)
     writer = (
         stream.writeStream.foreachBatch(dedupe.process_batch)

@@ -1,6 +1,9 @@
+import os
 import sys
+import tempfile
 from pathlib import Path
 
+import duckdb
 import pytest
 from hypothesis import settings
 
@@ -16,6 +19,22 @@ def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running end-to-end test")
 
 from lieu_spark.session import build_session  # noqa: E402
+
+
+def duckdb_connect():
+    """In-process DuckDB connection for the oracle tests, capped at 4 GB.
+
+    DuckDB's default memory_limit is 80% of RAM; next to the Spark JVM
+    in the same box that gets the pytest process OOM-killed by the
+    largest sf0.1 oracles. The cap only makes DuckDB spill to its temp
+    directory (under $SPARK_LOCAL_DIRS, with Spark's other scratch
+    files) — query results are unchanged."""
+    con = duckdb.connect()
+    local = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
+    tmp = os.path.join(local.split(",")[0], "duckdb")
+    con.execute("SET memory_limit='4GB'")
+    con.execute(f"SET temp_directory='{tmp}'")
+    return con
 
 
 @pytest.fixture(scope="session")

@@ -201,9 +201,7 @@ def test_refresh_and_stream_refuse_aux_configs(spark, tmp_path):
 
     cfg = DedupeConfig(asymmetry_field="tool")
     with _pytest.raises(ValueError, match="aux"):
-        IncrementalDeduper(
-            spark, str(tmp_path / "i"), str(tmp_path / "p"), cfg
-        )
+        IncrementalDeduper(spark, str(tmp_path / "w"), cfg)
     empty = spark.createDataFrame([], "conv_id string, text_sha string")
     with _pytest.raises(ValueError, match="aux"):
         refresh_dedupe(empty, empty, empty, empty, cfg, lambda df: df)

@@ -5,8 +5,8 @@ values at sf0.01 — this is a local pre-flight of CORRECTNESS_r{N}.json.
 
 import math
 
-import duckdb
 import pytest
+from conftest import duckdb_connect
 
 import __spark_entry__ as entry_mod
 
@@ -19,7 +19,7 @@ TABLES = [
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"

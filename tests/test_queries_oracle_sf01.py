@@ -7,8 +7,8 @@ and already covered at sf0.01.
 
 import math
 
-import duckdb
 import pytest
+from conftest import duckdb_connect
 
 import __spark_entry__ as entry_mod
 
@@ -25,7 +25,7 @@ SKIP = {"ann_topk", "embedding_neardup", "ann_ivf_topk", "hard_negatives"}
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"

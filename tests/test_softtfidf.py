@@ -15,10 +15,10 @@ Three layers:
 
 import random
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import duckdb_connect
 from pyspark.sql import functions as F
 
 from lieu_spark.config import DedupeConfig
@@ -37,7 +37,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _duck_jw6(cases):
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute("CREATE TABLE t(i INT, a VARCHAR, b VARCHAR)")
     con.executemany(
         "INSERT INTO t VALUES (?, ?, ?)", [(i, a, b) for i, (a, b) in enumerate(cases)]

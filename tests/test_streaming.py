@@ -187,7 +187,7 @@ def test_stream_cross_batch_empty_doc_exacts_and_replay_idempotence(
                           "again and again tonight", None, ts),  # twin of a1
     ])
     work = tmp_path / "w"
-    ded = IncrementalDeduper(spark, f"{work}/index", f"{work}/pairs", CFG)
+    ded = IncrementalDeduper(spark, str(work), CFG)
     ded.process_batch(b1, 0)
     ded.process_batch(b2, 1)
 
@@ -238,7 +238,11 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
     from lieu_spark.operators.assemble import assemble_conversations
     from lieu_spark.operators.lsh import band_table_dual, match_pairs
     from lieu_spark.pipeline import build_features
-    from lieu_spark.streaming.ingest import IncrementalDeduper
+    from lieu_spark.streaming.ingest import (
+        IncrementalDeduper,
+        _bh_bucket,
+        _pruned,
+    )
 
     ts = dt.datetime(2026, 1, 1)
     b1 = _mini_batch(spark, [
@@ -248,10 +252,7 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
         for i in range(6)
     ])
     work = tmp_path / "wp"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     ded.process_batch(b1, 0)
 
     b2 = _mini_batch(spark, [
@@ -268,10 +269,11 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
         .drop("_rep")
     )
     feat_bands = band_table_dual(feat_reps, CFG)
-    stored = ded._band_state(before_batch=1)
+    stored = ded._state("bands", before_batch=1)
+    mod = ded._band_buckets()
     cross = match_pairs(
-        ded._prune_buckets(stored, feat_bands), feat_bands, CFG,
-        broadcast_incoming=True,
+        _pruned(stored, "bh_bucket", feat_bands.select(_bh_bucket(mod)), mod - 1),
+        feat_bands, CFG, broadcast_incoming=True,
     )
     plan = cross._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -328,7 +330,11 @@ def test_stream_verify_index_scan_bounded(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from lieu_spark.streaming.ingest import IncrementalDeduper
+    from lieu_spark.streaming.ingest import (
+        VERIFY_ID_CAP,
+        IncrementalDeduper,
+        _pruned,
+    )
 
     ts = dt.datetime(2026, 1, 1)
     b1 = _mini_batch(spark, [
@@ -338,16 +344,13 @@ def test_stream_verify_index_scan_bounded(spark, tmp_path):
         for i in range(5)
     ])
     work = tmp_path / "wb"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     ded.process_batch(b1, 0)
-    index = ded._load_index(before_batch=1)
+    index = ded._state("index", before_batch=1)
     cand = spark.createDataFrame(
         [("a0", "n1"), ("a3", "n2")], "id_a string, id_b string"
     )
-    bounded = ded._bounded_index(index, cand)
+    bounded = _pruned(index, "conv_id", cand.select("id_a"), VERIFY_ID_CAP)
     plan = bounded._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "simple"
@@ -377,10 +380,7 @@ def test_stream_cross_batch_boundary_straddling_pair(spark, tmp_path):
     dup = clause + " " + " ".join(tail[:-1])    # ratio 10.10: char-primary, in band
 
     work = tmp_path / "wstrad"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     ded.process_batch(_mini_batch(spark, [("orig", 0, "user", base, None, ts)]), 0)
     ded.process_batch(_mini_batch(spark, [("copy", 0, "user", dup, None, ts)]), 1)
 
@@ -423,10 +423,7 @@ def test_stream_state_compaction(spark, tmp_path):
         ])
 
     work = tmp_path / "wc"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     for i in range(4):
         ded.process_batch(batch(i), i)
 
@@ -488,7 +485,7 @@ def test_stream_state_compaction(spark, tmp_path):
     out.write(bytearray(json.dumps({"merged": [2, 3], "target": 3}).encode()))
     out.close()
     fs.delete(P(f"{idx_dir}/batch_id=2"), True)  # simulated mid-swap crash
-    healed = ded._load_index(before_batch=5)
+    healed = ded._state("index", before_batch=5)
     assert sorted(r.conv_id for r in healed.collect()) == merged_rows
     assert sorted(_batch_subdir_ids(spark, idx_dir)) == [3, 4]
 
@@ -503,8 +500,10 @@ def test_stream_sha_state_pruned_and_correct(spark, tmp_path):
     from lieu_spark.pipeline import build_features
     from lieu_spark.operators.assemble import assemble_conversations
     from lieu_spark.streaming.ingest import (
+        VERIFY_ID_CAP,
         IncrementalDeduper,
         _batch_subdir_ids,
+        _pruned,
         compact_state,
     )
 
@@ -515,10 +514,7 @@ def test_stream_sha_state_pruned_and_correct(spark, tmp_path):
         for i in range(4)
     ])
     work = tmp_path / "wsha"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands", shas_dir=f"{work}/shas",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     ded.process_batch(b1, 0)
 
     # fold row-identical to the index projection
@@ -542,8 +538,8 @@ def test_stream_sha_state_pruned_and_correct(spark, tmp_path):
             f"w0{k}" for k in range(8)), None, ts),
     ])
     feats = build_features(assemble_conversations(b2), CFG)
-    stored = ded._sha_state(before_batch=1)
-    pruned = ded._pruned_shas(stored, feats)
+    stored = ded._state("shas", before_batch=1)
+    pruned = _pruned(stored, "text_sha", feats.select("text_sha"), VERIFY_ID_CAP)
     plan = pruned._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "simple"
@@ -589,13 +585,16 @@ def test_stream_sha_state_pruned_and_correct(spark, tmp_path):
 
 
 def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
-    """compact_state (a) resolves the deduper's constructor-default
-    ``{index_dir}_shas`` layout instead of silently no-opping that kind,
-    (b) refuses to merge around a band-subdir hole without the stream's
-    config, and (c) given the config, backfills the hole row-identically
-    BEFORE merging — merging around it would bake the loss into state
-    permanently (the per-kind batch ids line up again afterwards, so the
-    ordinary backfill could never detect it)."""
+    """(a) A work_dir holding only ``index/`` (what a state dir keeps
+    once its band/sha dirs are lost or were kept elsewhere, as the old
+    ``{index_dir}_bands``/``_shas`` layout did) gets ``bands/`` and
+    ``shas/`` backfilled row-identically and still matches the next
+    batch. compact_state (b) refuses to merge around a band-subdir hole
+    without the stream's config, and (c) given the config, backfills
+    the hole row-identically BEFORE merging — merging around it would
+    bake the loss into state permanently (the per-kind batch ids line
+    up again afterwards, so the ordinary backfill could never detect
+    it)."""
     import datetime as dt
     import shutil
 
@@ -617,23 +616,46 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
         ])
 
     work = tmp_path / "wh"
-    # shas_dir intentionally omitted: constructor default {index}_shas
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     for i in range(4):
         ded.process_batch(batch(i), i)
 
-    bands_before = sorted(
-        (r.id, r.band, r.band_hash)
-        for r in spark.read.parquet(f"{work}/bands").collect()
-    )
-    shas_before = sorted(
-        (r.conv_id, r.text_sha)
-        for r in spark.read.parquet(f"{work}/index_shas").collect()
-    )
+    def band_rows(d):
+        return sorted(
+            (r.id, r.band, r.band_hash, r.bh_bucket, r.batch_id)
+            for r in spark.read.parquet(f"{d}/bands").collect()
+        )
 
+    def sha_rows(d):
+        return sorted(
+            (r.conv_id, r.text_sha, r.batch_id)
+            for r in spark.read.parquet(f"{d}/shas").collect()
+        )
+
+    bands_before = band_rows(work)
+    shas_before = sha_rows(work)
+
+    # (a) index-only work_dir: the next batch's state loads backfill
+    # both derived kinds, and a copy of a batch-1 doc still matches
+    only = tmp_path / "wi"
+    shutil.copytree(f"{work}/index", f"{only}/index")
+    copy = _mini_batch(spark, [(
+        "zcopy", 0, "user",
+        "hole test batch 1 row 0 " + " ".join(f"hk10{k}" for k in range(10)),
+        None, ts,
+    )])
+    IncrementalDeduper(spark, str(only), CFG).process_batch(copy, 4)
+    assert [r for r in band_rows(only) if r[-1] < 4] == bands_before
+    assert [r for r in sha_rows(only) if r[-1] < 4] == shas_before
+    hits = {
+        (r.id_a, r.id_b)
+        for r in spark.read.parquet(f"{only}/pairs")
+        .filter("status = 'exact_duplicate'").collect()
+    }
+    assert ("h1_0", "zcopy") in hits, sorted(hits)
+
+    bands_before = sorted(r[:3] for r in bands_before)
+    shas_before = sorted(r[:2] for r in shas_before)
     # punch a hole: batch 1's band fold is lost (crash between the
     # index write and the band fold, never replayed)
     shutil.rmtree(f"{work}/bands/batch_id=1")
@@ -642,9 +664,8 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
         compact_state(spark, str(work))
 
     summary = compact_state(spark, str(work), cfg=CFG)
-    # the legacy-layout sha dir was found and compacted, not no-opped
     assert summary["shas"]["merged"] == 3
-    assert sorted(_batch_subdir_ids(spark, f"{work}/index_shas")) == [2, 3]
+    assert sorted(_batch_subdir_ids(spark, f"{work}/shas")) == [2, 3]
     assert summary["bands"]["merged"] == 3
     # the hole was backfilled before the merge: row-identical band state
     assert sorted(
@@ -653,8 +674,71 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
     ) == bands_before
     assert sorted(
         (r.conv_id, r.text_sha)
-        for r in spark.read.parquet(f"{work}/index_shas").collect()
+        for r in spark.read.parquet(f"{work}/shas").collect()
     ) == shas_before
+
+
+def test_compaction_refuses_unreadable_config_marker(spark, tmp_path):
+    """A band backfill in compact_state checks the work_dir's config
+    marker exactly as run_stream does: an unreadable marker (truncated
+    JSON, or JSON without the fingerprint) is refused with the same
+    ValueError, never a raw decode/key error."""
+    import datetime as dt
+    import shutil
+
+    from lieu_spark.streaming.ingest import IncrementalDeduper, compact_state
+
+    ts = dt.datetime(2026, 1, 1)
+    work = tmp_path / "wmk"
+    ded = IncrementalDeduper(spark, str(work), CFG)
+    for i in range(3):
+        ded.process_batch(_mini_batch(spark, [(
+            f"k{i}", 0, "user",
+            f"marker test batch {i} " + " ".join(f"mt{i}{k}" for k in range(10)),
+            None, ts,
+        )]), i)
+    shutil.rmtree(f"{work}/bands/batch_id=0")
+    for corrupt in ('{"fingerprint": ', '{"other": 1}'):
+        spark.createDataFrame([(corrupt,)], "value string").coalesce(1).write.mode(
+            "overwrite"
+        ).text(f"{work}/_config_marker")
+        with pytest.raises(ValueError, match="unreadable"):
+            run_stream(spark, str(tmp_path / "in"), str(work), CFG)
+        with pytest.raises(ValueError, match="unreadable"):
+            compact_state(spark, str(work), cfg=CFG)
+
+
+def test_stream_correct_with_broadcast_hints_off(spark, tmp_path, monkeypatch):
+    """Catch-up regime: a batch past STREAM_BROADCAST_CAP switches the
+    batch-side broadcast hints off — the vs-index joins shuffle — and
+    must write exactly the pairs of the default broadcast shape (the
+    twin of test_refresh's REFRESH_BROADCAST_CAP test)."""
+    import lieu_spark.streaming.ingest as ingest
+
+    rows = corpus.generate_rows(7, 40)
+    b1 = [r for r in rows if int(r.conv_id[1:]) % 2 == 0]
+    # batch 2: the odd convs plus byte-copies of five batch-1 convs
+    b2 = [r for r in rows if int(r.conv_id[1:]) % 2 == 1] + [
+        (f"z{r.conv_id[1:]}", r.turn_idx, r.role, r.text, r.tool, r.ts)
+        for r in b1
+        if int(r.conv_id[1:]) < 10
+    ]
+
+    def drain(work):
+        ded = ingest.IncrementalDeduper(spark, str(work), CFG)
+        ded.process_batch(_mini_batch(spark, b1), 0)
+        ded.process_batch(_mini_batch(spark, b2), 1)
+        return sorted(
+            (r.id_a, r.id_b, r.status, round(r.jaccard, 9), r.batch_id)
+            for r in spark.read.parquet(f"{work}/pairs").collect()
+        )
+
+    want = drain(tmp_path / "bc")
+    monkeypatch.setattr(ingest, "STREAM_BROADCAST_CAP", 0)
+    got = drain(tmp_path / "sh")
+    assert got == want
+    # the byte-copies matched their batch-1 originals across batches
+    assert any(a.startswith("c") and b.startswith("z") for a, b, *_ in want)
 
 
 def test_band_layout_marker_only_written_by_write_path(spark, tmp_path):
@@ -667,10 +751,7 @@ def test_band_layout_marker_only_written_by_write_path(spark, tmp_path):
     from lieu_spark.streaming.ingest import BAND_BUCKETS, IncrementalDeduper
 
     work = tmp_path / "wm"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", CFG,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), CFG)
     assert ded._band_buckets() == BAND_BUCKETS
     assert not os.path.exists(f"{work}/bands/_layout.json")
 
@@ -715,10 +796,7 @@ def test_stream_assembly_caps_turns_like_the_pipeline(spark, tmp_path):
         ]
 
     work = tmp_path / "wcap"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", cfg,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), cfg)
     ded.process_batch(_mini_batch(spark, rows("c1", "canonical tail")), 0)
     ded.process_batch(_mini_batch(spark, rows("n1", "divergent tail")), 1)
 
@@ -749,10 +827,7 @@ def test_stream_standing_hot_band_fanout_bounded(spark, tmp_path):
     body = "alpha beta gamma delta epsilon zeta eta theta iota kappa " \
            "lamda mu nu xi omicron pi rho sigma tau upsilon"
     work = tmp_path / "whot"
-    ded = IncrementalDeduper(
-        spark, f"{work}/index", f"{work}/pairs", cfg,
-        bands_dir=f"{work}/bands",
-    )
+    ded = IncrementalDeduper(spark, str(work), cfg)
     ded.process_batch(
         _mini_batch(spark, [("a0", 0, "user", body, None, ts)]), 0
     )
@@ -774,8 +849,8 @@ def test_stream_standing_hot_band_fanout_bounded(spark, tmp_path):
         .select(*base.columns)
     )
     planted.write.parquet(f"{work}/index/batch_id=1")
-    ded._write_bands(planted, 1)
-    ded._write_shas(planted, 1)
+    ded._fold("bands", planted, 1)
+    ded._fold("shas", planted, 1)
 
     # incoming: a near-variant (distinct sha, shares band groups)
     ded.process_batch(
