@@ -964,7 +964,13 @@ def q_video_meta(spark, sf_dir):
     decode from arithmetic alone; no export channel."""
     from .functions.video import decode_video_meta, synthetic_video_payloads
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    # the documents table is one file split at oracle scale: spread the
+    # pure-python encode + decode over the cores instead of one task
+    d = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
     return decode_video_meta(synthetic_video_payloads(d)).orderBy("doc_id")
 
 

@@ -688,15 +688,11 @@ def test_compaction_refuses_unreadable_config_marker(spark, tmp_path):
 
     from lieu_spark.streaming.ingest import IncrementalDeduper, compact_state
 
-    ts = dt.datetime(2026, 1, 1)
     work = tmp_path / "wmk"
-    ded = IncrementalDeduper(spark, str(work), CFG)
-    for i in range(3):
-        ded.process_batch(_mini_batch(spark, [(
-            f"k{i}", 0, "user",
-            f"marker test batch {i} " + " ".join(f"mt{i}{k}" for k in range(10)),
-            None, ts,
-        )]), i)
+    IncrementalDeduper(spark, str(work), CFG).process_batch(_mini_batch(spark, [(
+        "k0", 0, "user", "marker test " + " ".join(f"mt{k}" for k in range(10)),
+        None, dt.datetime(2026, 1, 1),
+    )]), 0)
     shutil.rmtree(f"{work}/bands/batch_id=0")
     for corrupt in ('{"fingerprint": ', '{"other": 1}'):
         spark.createDataFrame([(corrupt,)], "value string").coalesce(1).write.mode(
@@ -713,6 +709,8 @@ def test_stream_correct_with_broadcast_hints_off(spark, tmp_path, monkeypatch):
     batch-side broadcast hints off — the vs-index joins shuffle — and
     must write exactly the pairs of the default broadcast shape (the
     twin of test_refresh's REFRESH_BROADCAST_CAP test)."""
+    import shutil
+
     import lieu_spark.streaming.ingest as ingest
 
     rows = corpus.generate_rows(7, 40)
@@ -724,18 +722,23 @@ def test_stream_correct_with_broadcast_hints_off(spark, tmp_path, monkeypatch):
         if int(r.conv_id[1:]) < 10
     ]
 
-    def drain(work):
-        ded = ingest.IncrementalDeduper(spark, str(work), CFG)
-        ded.process_batch(_mini_batch(spark, b1), 0)
-        ded.process_batch(_mini_batch(spark, b2), 1)
+    ingest.IncrementalDeduper(spark, str(tmp_path / "bc"), CFG).process_batch(
+        _mini_batch(spark, b1), 0
+    )
+    shutil.copytree(tmp_path / "bc", tmp_path / "sh")
+
+    def second_batch(work):
+        ingest.IncrementalDeduper(spark, str(work), CFG).process_batch(
+            _mini_batch(spark, b2), 1
+        )
         return sorted(
-            (r.id_a, r.id_b, r.status, round(r.jaccard, 9), r.batch_id)
-            for r in spark.read.parquet(f"{work}/pairs").collect()
+            (r.id_a, r.id_b, r.status, round(r.jaccard, 9))
+            for r in spark.read.parquet(f"{work}/pairs/batch_id=1").collect()
         )
 
-    want = drain(tmp_path / "bc")
+    want = second_batch(tmp_path / "bc")
     monkeypatch.setattr(ingest, "STREAM_BROADCAST_CAP", 0)
-    got = drain(tmp_path / "sh")
+    got = second_batch(tmp_path / "sh")
     assert got == want
     # the byte-copies matched their batch-1 originals across batches
     assert any(a.startswith("c") and b.startswith("z") for a, b, *_ in want)
