@@ -46,7 +46,7 @@ def match(
     Blocking (operators/blocking.py): the canonical side bands one rep
     per text_sha, the incoming side (small; each id must appear in the
     output) bands every content-bearing doc, and ``cross_candidates``
-    pairs them.
+    pairs them over every band family, SimHash chunks included.
     Verified rep pairs are expanded back to every identical-text
     canonical member — exact, because identical text implies identical
     features, hence identical verdicts.

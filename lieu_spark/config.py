@@ -53,9 +53,10 @@ class DedupeConfig:
     threshold_likely: float = 0.9
     threshold_review: float = 0.7
     # --- SimHash near-exact path ---
-    # whether the SimHash candidate FAMILY runs (pipeline candidates +
-    # refresh cross path). Lives in the config — not a run_pipeline
-    # argument — so the checkpoint/refresh fingerprint captures it: a
+    # whether banding emits the SimHash chunk FAMILY (lsh.band_table_dual;
+    # every entry point then pairs it through the band joins). Lives in
+    # the config — not a run_pipeline argument — so the
+    # checkpoint/refresh fingerprint captures it: a
     # store built without the family can never be silently refreshed
     # WITH it (or vice versa), which would break refresh-vs-scratch
     # parity. The simhash COLUMN is always computed (it rides the same
@@ -77,7 +78,8 @@ class DedupeConfig:
     # collides on >=1 of 4 chunks") is *exactly* 1 colliding chunk in the
     # worst case, so splitting that one group silently loses the pair.
     # Set a cap only when a boilerplate-heavy corpus makes a chunk group
-    # quadratic; losses then surface in simhash_chunk_stats (is_hot rows).
+    # quadratic; losses then surface in lsh.band_stats (is_hot chunk
+    # groups, bands 2*lsh_bands..).
     simhash_hot_chunk_cap: int | None = None
     # cap on turns assembled per conversation (None = unbounded): bounds
     # the collect_list buffer + doc size against a single pathological
@@ -161,8 +163,15 @@ class DedupeConfig:
         bump it so store-backed resumes of aux-enabled configs recompute
         instead of serving stages built under the old semantics. Only
         mixed in when a rule is active, so plain-config fingerprints
-        (and their stores) are untouched by aux revisions."""
+        (and their stores) are untouched by aux revisions.
+
+        ``band_schema`` is the same kind of revision for the band state
+        of every config: revision 2 stores the SimHash chunk family as
+        band rows (with a simhash column), so stage stores and stream
+        work_dirs written before it recompute or are refused instead of
+        silently missing chunk rows or mixing band schemas."""
         d = asdict(self)
+        d["band_schema"] = 2
         if self.asymmetry_field is not None or self.revision_field is not None:
             d["aux_semantics"] = 2
         payload = json.dumps(d, sort_keys=True).encode()

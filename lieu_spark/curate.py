@@ -12,7 +12,7 @@ actually runs before pretraining.
 
 Every stage flows through the same checkpoint/metrics recipe as
 ``pipeline.run_pipeline`` (StageStore fingerprint = config + input
-signature; per-partition lineage via metrics.record_stage), so a 100 TB
+signature; per-partition lineage via metrics.record_stages), so a 100 TB
 curation run resumes mid-funnel without recomputing completed stages.
 The dedupe stage IS run_pipeline — documents enter as one-turn
 transcripts, so the full blocking/verify/CC machinery (salted hot
@@ -59,7 +59,7 @@ from .functions.sampling import (
     mixture_sample,
     split_assign,
 )
-from .metrics import record_stage
+from .metrics import record_stages
 from .operators.packing import pack_sequences
 from .pipeline import run_pipeline
 
@@ -294,7 +294,7 @@ def curate(
                 funnel[name] = n
         wall = time.time() - t0
         walls[name] = wall
-        record_stage(spark, metrics_dir, run_id, name, df, wall, fp)
+        record_stages(spark, metrics_dir, run_id, [(name, df, wall)], fp)
         return df
 
     def build_annotated() -> DataFrame:

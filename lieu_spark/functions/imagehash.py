@@ -358,51 +358,34 @@ def image_decon_keep(
     buckets present on BOTH sides (millions of near-black training
     frames colliding with a near-black eval image on every chunk):
     train-side chunk groups above the cap are sub-bucketed with the
-    same xxhash64 rule as image_neardup_pairs (lsh.capped_group_join).
+    same xxhash64 rule as image_neardup_pairs (lsh.match_pairs, the band
+    cross join, over the chunk band family).
     Under the cap a contaminated image whose ONLY colliding chunk was
     split can evade decon (recovered by the other chunks-1 slices when
     any other chunk also collides) — default None keeps decon exact."""
     from ..config import DedupeConfig
-    from ..operators.lsh import capped_group_join
-    from ..operators.simhash_path import simhash_chunk_table
-    from .simhash import hamming64
+    from ..operators.lsh import match_pairs
+    from ..operators.simhash_path import chunk_band_table
 
     if hamming_max >= chunks:
         raise ValueError(
             f"hamming_max={hamming_max} needs chunks > hamming_max for the "
             f"pigeonhole guarantee (got chunks={chunks})"
         )
-    cfg = DedupeConfig(simhash_chunks=chunks, simhash_hamming_max=hamming_max)
+    cfg = DedupeConfig(
+        simhash_chunks=chunks,
+        simhash_hamming_max=hamming_max,
+        simhash_hot_chunk_cap=hot_chunk_cap,
+    )
 
     def chunked(hashes: DataFrame) -> DataFrame:
-        return simhash_chunk_table(
-            hashes.select(
-                F.col("doc_id").alias("conv_id"), F.col("ahash").alias("simhash")
-            ),
-            cfg,
+        return chunk_band_table(
+            hashes.select(F.col("ahash").alias("simhash"), "doc_id"), cfg, "doc_id"
         )
 
-    cand = (
-        capped_group_join(
-            chunked(train_hashes).withColumnRenamed("id", "doc_id"),
-            chunked(eval_hashes).withColumnRenamed("id", "eval_id"),
-            ["chunk", "chunk_bits"],
-            hot_chunk_cap,
-            "doc_id",
-            "eval_id",
-        )
-        .select("doc_id", "eval_id")
-        .dropDuplicates(["doc_id", "eval_id"])
-    )
-    ta = train_hashes.select("doc_id", F.col("ahash").alias("ahash_t"))
-    ea = eval_hashes.select(
-        F.col("doc_id").alias("eval_id"), F.col("ahash").alias("ahash_e")
-    )
     contaminated = (
-        cand.join(ta, "doc_id")
-        .join(ea, "eval_id")
-        .filter(hamming64(F.col("ahash_t"), F.col("ahash_e")) <= hamming_max)
-        .select("doc_id")
+        match_pairs(chunked(train_hashes), chunked(eval_hashes), cfg)
+        .select(F.col("canonical_id").alias("doc_id"))
         .distinct()
     )
     return train_hashes.join(contaminated, "doc_id", "left_anti")

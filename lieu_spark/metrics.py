@@ -29,18 +29,6 @@ def partition_lineage(df: DataFrame) -> DataFrame:
     )
 
 
-def record_stage(
-    spark: SparkSession,
-    metrics_dir: str | None,
-    run_id: str,
-    stage: str,
-    df: DataFrame,
-    wall_sec: float,
-    fingerprint: str,
-) -> None:
-    record_stages(spark, metrics_dir, run_id, [(stage, df, wall_sec)], fingerprint)
-
-
 def record_stages(
     spark: SparkSession,
     metrics_dir: str | None,
@@ -50,7 +38,7 @@ def record_stages(
 ) -> None:
     """Append several stages' lineage rows in ONE write job. The
     streaming path records 3 rows per micro-batch (total / match /
-    fold); as separate record_stage calls that is 3 Spark jobs + 3
+    fold); as separate calls that is 3 Spark jobs + 3
     parquet commits per batch — per-batch fixed cost the trickle case
     pays forever. Unioning the lineage frames first makes it one."""
     if metrics_dir is None or not entries:

@@ -5,13 +5,17 @@ keys feed both a self-pairing (``dupe_sims``) and a cross-dataset
 
   * ``representatives`` — similarity blocking runs on ONE content-
     bearing representative per text_sha (window min conv_id);
-  * ``within_candidates`` — inside one set: LSH bands over the reps ∪
-    the exact-sha star over every member ∪ SimHash over the reps;
+  * ``within_candidates`` — inside one set: the band self-join over the
+    reps' bands ∪ the exact-sha star over every member;
   * ``cross_candidates`` — standing vs incoming set: hot-capped band
     equi-join ∪ text_sha equi-join.
 
 Banding (lsh.band_table_dual) is a layer of its own — its output is the
-band state the stream and refresh store — so callers pass bands in.
+band state the stream and refresh store — so callers pass bands in. It
+decides the blocking families once: MinHash bands of both gram families
+and, when the config enables it, the SimHash chunk family. Both joins
+pair every family of the table, so the stream (across micro-batches),
+refresh and api.match pair SimHash exactly like the pipeline.
 
 Rep-blocking closure argument: identical texts have identical shingles,
 so every member edge is implied by (rep edge + exact star edge) and is
@@ -37,8 +41,8 @@ from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
 from .exact import exact_star_pairs
-from .lsh import candidate_pairs, match_pairs
-from .simhash_path import simhash_candidate_pairs
+from .lsh import band_pairs, match_pairs
+from .simhash_path import is_chunk_band
 
 
 def tag_reps(features: DataFrame, extra_keys: Sequence[str] = ()) -> DataFrame:
@@ -59,33 +63,28 @@ def representatives(features: DataFrame, extra_keys: Sequence[str] = ()) -> Data
 
 
 def within_candidates(
-    reps: DataFrame,
     bands: DataFrame,
     members: DataFrame,
     cfg: DedupeConfig,
     star: DataFrame | None = None,
 ) -> DataFrame:
     """Self-pairing inside one set -> (id_a, id_b, source), id_a < id_b:
-    LSH over ``bands`` (lsh.band_table_dual of the reps, which every
-    caller also stages, persists or stores) ∪ ``star`` (default the
-    exact star over ``members``) ∪ SimHash over ``reps`` when
-    cfg.with_simhash_path is on.
+    the band self-join over ``bands`` (lsh.band_table_dual of the reps,
+    which every caller also stages, persists or stores; ``source`` is
+    the family, minhash_lsh or simhash) ∪ ``star`` (default the exact
+    star over ``members``, source exact_sha).
 
-    NOT deduplicated (distinct=False on both similarity families): every
-    caller re-aggregates on (id_a, id_b) — the pipeline's source-tag
-    collect_set, the others' dropDuplicates — so a family-internal pair
-    dedup would shuffle the pair set twice."""
+    NOT deduplicated: every caller re-aggregates on (id_a, id_b) — the
+    pipeline's source-tag collect_set, the others' dropDuplicates — so a
+    family-internal pair dedup would shuffle the pair set twice."""
     if star is None:
         star = exact_star_pairs(members)
-    merged = candidate_pairs(bands, cfg, distinct=False).withColumn(
-        "source", F.lit("minhash_lsh")
+    family = F.when(is_chunk_band(cfg), F.lit("simhash")).otherwise(
+        F.lit("minhash_lsh")
+    )
+    return band_pairs(bands, cfg).select(
+        "id_a", "id_b", family.alias("source")
     ).unionByName(star.withColumn("source", F.lit("exact_sha")))
-    if cfg.with_simhash_path:
-        sim = simhash_candidate_pairs(reps, cfg, distinct=False)
-        merged = merged.unionByName(
-            sim.select("id_a", "id_b").withColumn("source", F.lit("simhash"))
-        )
-    return merged
 
 
 def cross_candidates(
@@ -97,13 +96,13 @@ def cross_candidates(
     broadcast_incoming: bool = False,
 ) -> DataFrame:
     """Standing vs incoming set -> (standing_id, incoming_id), not
-    deduplicated: band match ∪ text_sha equi-join of the (conv_id,
-    text_sha) frames. The sha join carries the exact star across sets
-    and pairs content-empty docs, which never band. hot_cap bounds the
-    fanout of near-identical boilerplate bands (distinct shas, shared
-    bands), which rep-dedup does not collapse. ``broadcast_incoming``
-    is the micro-batch shape: the standing side never shuffles (see
-    lsh.capped_group_join)."""
+    deduplicated: band match over every family ∪ text_sha equi-join of
+    the (conv_id, text_sha) frames. The sha join carries the exact star
+    across sets and pairs content-empty docs, which never band. hot_cap
+    bounds the fanout of near-identical boilerplate bands (distinct
+    shas, shared bands), which rep-dedup does not collapse.
+    ``broadcast_incoming`` is the micro-batch shape: the standing side
+    never shuffles (see lsh.capped_group_join)."""
     lsh = match_pairs(
         standing_bands, incoming_bands, cfg,
         broadcast_incoming=broadcast_incoming, hot_cap=cfg.hot_band_cap,

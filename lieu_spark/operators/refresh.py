@@ -37,8 +37,9 @@ What is incremental (the scale story):
     corpus side never shuffles; the hint is GATED on the measured CDC
     count, see refresh_dedupe, so a mass-removal snapshot degrades to
     a shuffle join instead of a driver OOM).
-  - Candidate generation joins the small incoming band/chunk tables
-    against the standing state tables; at production scale the state
+  - Candidate generation joins the small incoming band table (every
+    blocking family: MinHash bands and SimHash chunks) against the
+    standing band state; at production scale the state
     tables are the pipeline's persisted stage tables, bucketed on the
     join key (sources/io.write_bucketed) so the standing side is not
     even shuffled.
@@ -64,7 +65,7 @@ re-derives the dedupe state from it).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -74,7 +75,6 @@ from ..config import DedupeConfig
 from .cluster import clusters_with_singletons, connected_components
 from . import blocking
 from .lsh import band_table_dual
-from .simhash_path import simhash_match_pairs
 from .verify import dupe_pairs, verify_pairs
 
 # Above this many CDC rows the broadcast hints on delta/gone-derived
@@ -121,12 +121,11 @@ def refresh_dedupe(
     rows; its output must cover ``old_features``' columns (it is only
     ever called on content the old snapshot has never seen).
 
-    The SimHash family runs when ``cfg.with_simhash_path`` is set AND
-    ``old_features`` carries a ``simhash`` column: cfg carries the
-    INTENT (it is in the checkpoint fingerprint, so a refresh_pipeline
-    store provably matches), the column check is the CAPABILITY guard
-    (hand-built state without the column physically cannot run the
-    family — the test featurizers are such state).
+    The blocking families are the band state's: banding
+    (lsh.band_table_dual, the one place the SimHash switch is read)
+    adds the chunk family when the features carry ``simhash``, and the
+    band joins pair whatever families the tables hold — a featurizer
+    without ``simhash`` simply bands without the family.
 
     Auxiliary-field pair rules (cfg.asymmetry_field / revision_field)
     are REFUSED here: refresh's rep selection, star repair, and
@@ -162,9 +161,6 @@ def refresh_dedupe(
         )
     if "text_sha" not in new_conversations.columns:
         raise ValueError("new_conversations must carry text_sha")
-    # the SimHash capability guard (docstring), resolved into cfg once
-    if "simhash" not in old_features.columns:
-        cfg = replace(cfg, with_simhash_path=False)
 
     # ---- CDC on (id, content hash) --------------------------------
     new_keys = new_conversations.select(idc, "text_sha")
@@ -288,15 +284,15 @@ def refresh_dedupe(
     incoming_bands = band_table_dual(incoming_feats, cfg)
 
     # ---- candidates (operators/blocking.py) -----------------------
-    # within the incoming set: LSH ∪ SimHash over the incoming reps ∪
-    # the delta's exact star
+    # within the incoming set: the incoming reps' band self-join ∪ the
+    # delta's exact star
     within = blocking.within_candidates(
-        incoming_feats, incoming_bands, delta_feats, cfg
+        incoming_bands, delta_feats, cfg
     ).select("id_a", "id_b")
-    # incoming vs standing: band match ∪ an edge from each delta doc
-    # joining an EXISTING identical-text group to the minimum surviving
-    # member of the shared sha (connectivity — the survivors' own stars
-    # do the rest)
+    # incoming vs standing: band match (every family) ∪ an edge from
+    # each delta doc joining an EXISTING identical-text group to the
+    # minimum surviving member of the shared sha (connectivity — the
+    # survivors' own stars do the rest)
     delta_shas = delta_feats.select("text_sha").distinct()
     surv_sha_min = (
         surv_feats.join(bc(delta_shas), "text_sha", "left_semi")
@@ -306,22 +302,10 @@ def refresh_dedupe(
     cross = blocking.cross_candidates(
         standing_bands, surv_sha_min, incoming_bands, delta_feats, cfg
     ).select(*_pair(F.col("standing_id"), F.col("incoming_id")))
-    cand = within.unionByName(cross).unionByName(star_repair)
-    # SimHash across the snapshots: incoming reps vs the standing reps
-    # (the band state's ids)
-    if cfg.with_simhash_path:
-        standing_rep_feats = old_features.join(
-            standing_bands.select(F.col("id").alias(idc)).distinct(),
-            idc,
-            "left_semi",
-        )
-        cand = cand.unionByName(
-            simhash_match_pairs(standing_rep_feats, incoming_feats, cfg).select(
-                *_pair(F.col("canonical_id"), F.col("incoming_id"))
-            )
-        )
     cand = (
-        cand.filter(F.col("id_a") != F.col("id_b"))
+        within.unionByName(cross)
+        .unionByName(star_repair)
+        .filter(F.col("id_a") != F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
         .localCheckpoint()
     )
@@ -363,9 +347,11 @@ def refresh_dedupe(
     # (parquet round-trip truncates the same way); checkpoint_state
     # covers the in-memory chaining path.
     features_new = surv_feats.select(*cols).unionByName(delta_feats.select(*cols))
-    bands_new = standing_bands.unionByName(incoming_bands).dropDuplicates(
-        ["id", "band", "band_hash"]
-    )
+    # allowMissingColumns: hand-built state banded without the chunk
+    # family (no simhash column) may meet incoming bands that carry it
+    bands_new = standing_bands.unionByName(
+        incoming_bands, allowMissingColumns=True
+    ).dropDuplicates(["id", "band", "band_hash"])
     if checkpoint_state:
         features_new = features_new.localCheckpoint()
         bands_new = bands_new.localCheckpoint()
@@ -459,8 +445,8 @@ def refresh_pipeline(
     here against the stage metadata's recorded fingerprint (a mismatch
     would silently merge pairs verified under different thresholds; it
     raises instead). The SimHash family switch is a DedupeConfig field
-    (fingerprint-captured), so the matched cfg already says exactly
-    which candidate families the store was built with.
+    (fingerprint-captured), so the matched cfg bands the delta with
+    exactly the families the stored band state holds.
 
     checkpoint_state is OFF on this path: the returned state frames are
     shallow plans over the parquet state (one anti-join / one union),

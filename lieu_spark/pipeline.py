@@ -5,8 +5,9 @@ Stage DAG (each checkpointable, each recorded in the metrics table):
   transcripts
     -> assemble   (conv_id, turns, doc, text_sha)            [1 shuffle]
     -> features   (+tokens, shingle_hashes, sig, simhash)    [narrow]
-    -> bands      (id, band, band_hash)                      [narrow]
-    -> candidates (LSH ∪ exact star ∪ SimHash, tagged)      [2-3 shuffles]
+    -> bands      (id, band, band_hash, simhash): MinHash bands
+                  ∪ SimHash chunks                           [narrow]
+    -> candidates (band self-join ∪ exact star, tagged)     [2-3 shuffles]
     -> verified   (jaccard, status, method)                  [2 join shuffles]
     -> clusters   (connected components + singletons)        [iterative]
     -> spans      (copied-span stage on mid-similarity pairs)[mapInPandas]
@@ -45,7 +46,7 @@ from .functions.text import (
     token_hashes,
     tokenize,
 )
-from .metrics import record_stage
+from .metrics import record_stages
 from .operators.assemble import assemble_conversations
 from .operators.cluster import clusters_with_singletons, connected_components
 from .operators.blocking import representatives, within_candidates
@@ -194,7 +195,7 @@ def run_pipeline(
         elif cache or eager:
             df = df.persist()
         elif metrics_dir is not None:
-            # metrics imply persist: record_stage's lineage pass is an
+            # metrics imply persist: record_stages' lineage pass is an
             # action over this plan — unpersisted, it would execute the
             # stage once for metrics and AGAIN for the first downstream
             # consumer (doubling the heavy candidate/span stages). With
@@ -210,7 +211,7 @@ def run_pipeline(
             df.count()
         wall = time.time() - t0
         walls[name] = wall
-        record_stage(spark, metrics_dir, run_id, name, df, wall, fp)
+        record_stages(spark, metrics_dir, run_id, [(name, df, wall)], fp)
         return df
 
     conversations = stage(
@@ -289,7 +290,7 @@ def run_pipeline(
         # multi-band/multi-chunk duplicates collapse in collect_set's
         # map-side partial
         return within_candidates(
-            feat_reps, bands, feat_slim, cfg, star=star
+            bands, feat_slim, cfg, star=star
         ).groupBy("id_a", "id_b").agg(
             F.array_sort(F.collect_set("source")).alias("sources")
         )

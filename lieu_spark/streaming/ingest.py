@@ -11,8 +11,9 @@ lib/lieu/spark/dedupe.py:24-48), then folding new signatures into the
 index — exactly how a 100 TB deployment dedupes arriving data without
 re-blocking the corpus.
 
-Scale shape (the O(index)-per-batch fix): the *derived* LSH band table
-is folded incrementally per batch exactly like the feature table — the
+Scale shape (the O(index)-per-batch fix): the *derived* band table
+(every blocking family: MinHash bands and SimHash chunks) is folded
+incrementally per batch exactly like the feature table — the
 reference's incremental fold updates the derived statistic, not the raw
 docs (lib/lieu/spark/tfidf.py:43-45) — and stored partitioned by a
 band-hash bucket. Each micro-batch then:
@@ -33,8 +34,9 @@ fold, the backfill and ``compact_state``) and ``pairs/`` (the results
 log). ``IncrementalDeduper._state`` is the one loader of every kind.
 
 Candidates come from operators/blocking.py (see it for the rep-blocking
-closure argument). SimHash pairs WITHIN a micro-batch only: the stream
-state keeps no chunk fold, so cross-batch SimHash pairs are not matched.
+closure argument). The stored band state carries the SimHash chunk
+family, so SimHash pairs both within a micro-batch and across batches,
+exactly like the MinHash bands.
 
 Semantics note: a conversation is matchable once all its turns have
 arrived in one micro-batch window here; cross-batch turn assembly is
@@ -169,11 +171,11 @@ _STATE: dict[str, _Kind] = {
             "overwrite"
         ),
     ),
-    # the DERIVED band table, partitioned by band-hash bucket so no later
+    # the DERIVED band table (MinHash bands and SimHash chunks, with the
+    # chunk rows' simhash), partitioned by band-hash bucket so no later
     # batch re-bands the index and a batch's match prunes to the buckets
-    # it touches. The dual-family columns are required: bands backfilled
-    # from a pre-dual-schema index would be family-untagged and silently
-    # lose char-family matches.
+    # it touches. The dual-family and simhash columns are required: bands
+    # backfilled from an older index would silently lack a family.
     "bands": _Kind(
         derive=lambda ded, feats: band_table_dual(feats, ded.cfg).withColumn(
             "bh_bucket", _bh_bucket(ded._band_buckets())
@@ -181,7 +183,7 @@ _STATE: dict[str, _Kind] = {
         layout=lambda df: df.repartition(F.col("bh_bucket"))
         .write.mode("overwrite")
         .partitionBy("bh_bucket"),
-        needs=("alt_sig", "char_primary"),
+        needs=("alt_sig", "char_primary", "simhash"),
     ),
     # the (conv_id, text_sha) projection the cross-batch exact match
     # reads instead of scanning the wide feature index
@@ -502,7 +504,7 @@ class IncrementalDeduper:
                     raise ValueError(
                         f"index batch {i} at {index_dir} lacks the feature "
                         f"columns {sorted(missing)} its {kind} derive from "
-                        "— it was written by a pre-dual-schema build and "
+                        "— it was written by an older-schema build and "
                         "cannot be backfilled safely. Rebuild the stream "
                         "state in a fresh work_dir (replaying the landing "
                         "directory reproduces it)."
@@ -570,14 +572,13 @@ class IncrementalDeduper:
         """Candidates (operators/blocking.py) = within-batch self-pairs
         (``within_candidates``: the batch pipeline's families, so a
         batch's OWN near-dups pair here) ∪ incoming-vs-index pairs
-        (``cross_candidates``: LSH match against the STORED band state ∪
-        text_sha equi-join against the stored sha fold — the sha join
-        makes the pipeline's GLOBAL exact star hold across batches).
-        SimHash pairs only within a batch (module docstring). Dupe
-        members (the id_b side — min-id canonical stays) are withheld
-        from the index fold, so connected components over the
-        accumulated pairs reproduces the batch pipeline's clusters
-        (parity asserted in tests/test_streaming.py).
+        (``cross_candidates``: band match — MinHash and SimHash families
+        — against the STORED band state ∪ text_sha equi-join against the
+        stored sha fold — the sha join makes the pipeline's GLOBAL exact
+        star hold across batches). Dupe members (the id_b side — min-id
+        canonical stays) are withheld from the index fold, so connected
+        components over the accumulated pairs reproduces the batch
+        pipeline's clusters (parity asserted in tests/test_streaming.py).
 
         The vs-index match joins the batch's bands (broadcast — a
         micro-batch is small) against the stored, pre-derived band
@@ -618,10 +619,10 @@ class IncrementalDeduper:
         small_batch = feats.count() <= STREAM_BROADCAST_CAP
         feat_reps = blocking.representatives(feats)
         # persisted: three differently-pruned consumers (within-batch
-        # LSH, the bucket-prune collect, the vs-index match)
+        # band self-join, the bucket-prune collect, the vs-index match)
         feat_bands = band_table_dual(feat_reps, self.cfg).persist()
         within = blocking.within_candidates(
-            feat_reps, feat_bands, feats, self.cfg
+            feat_bands, feats, self.cfg
         ).select("id_a", "id_b")
         self._refuse_restarted_batch_ids(batch_id)
         index = self._state("index", before_batch=batch_id)

@@ -42,3 +42,27 @@ def spark():
     s = build_session(app_name="lieu_spark_tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def shuffled_copy(spark):
+    """(original, copy) one-turn transcript frames: an 80-word text and a
+    word-shuffled copy of it. The copy keeps the token multiset (SimHash
+    hamming 0) but shares almost no 5-shingles, so only the SimHash
+    family pairs the two — the entry-point parity probe for that family."""
+    import random
+    from datetime import datetime
+
+    from lieu_spark import corpus
+
+    words = [f"word{i}" for i in range(80)]
+    shuffled = list(words)
+    random.Random(3).shuffle(shuffled)
+    ts = datetime(2024, 1, 1)
+
+    def one(conv_id, text):
+        return spark.createDataFrame(
+            [(conv_id, 0, "user", text, None, ts)], corpus.TRANSCRIPT_SCHEMA
+        )
+
+    return one("s000000001", " ".join(words)), one("s000000002", " ".join(shuffled))

@@ -171,3 +171,20 @@ def test_response_nested_canonical_consistent_for_unclustered(spark):
     assert rows["a"].is_canonical and rows["b"].is_canonical
     assert rows["a"].possibly_same_as[0].is_canonical is True
     assert rows["b"].possibly_same_as[0].is_canonical is True
+
+
+def test_match_pairs_simhash_family_like_the_pipeline(spark, shuffled_copy):
+    """A word-shuffled copy pairs only through the SimHash family: match()
+    (canonical = original, incoming = copy) must return run_pipeline's
+    verified row for the pair — the chunk family rides both band
+    tables, so cross_candidates pairs it."""
+    from lieu_spark.pipeline import run_pipeline
+
+    original, copy = shuffled_copy
+    got = match(spark, original, copy, CFG).select(
+        "canonical_id", "incoming_id", "jaccard", "is_exact", "status"
+    )
+    want = run_pipeline(
+        spark, original.unionByName(copy), CFG, with_spans=False
+    ).verified.select("id_a", "id_b", "jaccard", "is_exact", "status")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]

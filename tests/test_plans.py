@@ -64,12 +64,15 @@ def _plan_nodes(df) -> list:
 
 
 def test_pipeline_candidates_plan_pinned(spark):
-    """run_pipeline's candidates stage (operators/blocking.py) keeps the
-    plan of the inline assembly it replaced, measured on this corpus:
-    12 hash exchanges — 7 on text_sha (the rep window under each of the
-    6 rep consumers, plus the exact star), one salt window per side of
-    each similarity self-join, one for the source-tag groupBy — and the
-    two self-joins keyed on plain (key, sub) attributes."""
+    """run_pipeline's candidates stage (operators/blocking.py), measured
+    on this corpus: 10 hash exchanges — 7 on text_sha (the rep window
+    under each of the 6 rep consumers: the word, char and SimHash chunk
+    branches of the band table on each side of the self-join, plus the
+    exact star), one salt window per side of the band self-join, one for
+    the source-tag groupBy — and ONE self-join keyed on plain
+    (band, band_hash, sub) attributes. The SimHash chunks are a band
+    family (lsh.band_table_dual), so the separate chunk self-join and
+    its two (chunk, chunk_bits) salt windows are gone."""
     import re
     from collections import Counter
 
@@ -89,16 +92,12 @@ def test_pipeline_candidates_plan_pinned(spark):
     assert exchanges == {
         "text_sha": 7,
         "band, band_hash": 2,
-        "chunk, chunk_bits": 2,
         "id_a, id_b": 1,
     }, exchanges
     join_keys = sorted(
         keys(n.leftKeys().toString()) for n in nodes if "Join" in n.nodeName()
     )
-    assert join_keys == [
-        "List(band, band_hash, sub)",
-        "List(chunk, chunk_bits, sub)",
-    ], join_keys
+    assert join_keys == ["List(band, band_hash, sub)"], join_keys
 
 
 def test_verify_plan_shape(spark):
@@ -212,8 +211,10 @@ def test_winnow_plan_reuses_exchange(spark):
 
 
 def test_simhash_candidates_salted_plan(spark):
-    """SimHash chunk self-join keys must include the salt attribute (same
-    skew policy as the LSH path), with no cartesian product."""
+    """SimHash chunk self-join keys must include the salt attribute (the
+    band self-join the chunk family shares with the LSH path, keyed on
+    the chunk band rows' (band, band_hash, sub)), with no cartesian
+    product."""
     from lieu_spark.operators.simhash_path import simhash_candidate_pairs
 
     feats = _feats(spark)  # build_features output already carries simhash
@@ -222,7 +223,7 @@ def test_simhash_candidates_salted_plan(spark):
     assert "CartesianProduct" not in plan
     key_lines = [ln for ln in plan.splitlines() if "Left keys" in ln]
     assert key_lines and any(
-        "chunk" in ln and "sub" in ln for ln in key_lines
+        "band_hash" in ln and "sub" in ln for ln in key_lines
     ), key_lines
 
 

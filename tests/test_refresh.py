@@ -215,6 +215,27 @@ def test_refresh_pipeline_parity_with_rep_blocked_state(spark, tmp_path):
     assert changes == {"gone", "delta"}
 
 
+def test_refresh_pipeline_pairs_simhash_family(spark, tmp_path, shuffled_copy):
+    """A new snapshot adds a word-shuffled copy of a standing
+    conversation — a pair only the SimHash family finds. The stored band
+    state carries the chunk family, so refresh's band cross join must
+    yield run_pipeline's verified row for the pair."""
+    from lieu_spark.checkpoint import StageStore
+    from lieu_spark.operators.refresh import refresh_pipeline
+    from lieu_spark.pipeline import run_pipeline
+
+    original, copy = shuffled_copy
+    store = StageStore(str(tmp_path / "s1"))
+    run_pipeline(spark, original, CFG, store=store, with_spans=False).clusters.count()
+    t2 = original.unionByName(copy)
+
+    cols = ["id_a", "id_b", "jaccard", "is_exact", "status"]
+    got = refresh_pipeline(spark, store, t2, CFG).verified.select(*cols)
+    want = run_pipeline(spark, t2, CFG, with_spans=False).verified.select(*cols)
+    assert got.collect() == want.collect()
+    assert len(want.collect()) == 1
+
+
 def _refresh_incr(spark, old_rows, new_rows):
     """refresh with old_clusters supplied -> incremental CC path."""
     old = _convs(spark, old_rows)
@@ -418,10 +439,10 @@ def test_match_pairs_broadcast_composes_with_hot_cap(spark):
 
 
 def test_refresh_simhash_autodetect(spark):
-    """The SimHash family is cfg.with_simhash_path gated on the old
-    state actually carrying a simhash column (the capability guard):
-    CFG has the family ON, but the test featurize emits no simhash
-    column -> auto-off must reproduce the family-off config's result."""
+    """Banding emits the SimHash family only for features that carry a
+    simhash column: CFG has the family ON, but the test featurize emits
+    no simhash column -> its bands lack the family, and the refresh
+    must reproduce the family-off config's result."""
     old = _convs(spark, SNAP1)
     feats, bands, verified, _ = _scratch(old)
     assert "simhash" not in feats.columns

@@ -38,27 +38,75 @@ def test_boilerplate_group_stays_linear(spark):
     assert star >= n_copies - 1
 
 
-def test_simhash_hot_chunk_stays_bounded(spark):
+@pytest.mark.parametrize(
+    "path, cfg, n",
+    [
+        # opt-in chunk salting on the primitive and on the entry-point
+        # path (band_table_dual + within_candidates)
+        ("simhash_candidate_pairs", DedupeConfig(simhash_hot_chunk_cap=50), 800),
+        ("within_candidates", DedupeConfig(simhash_hot_chunk_cap=50), 800),
+        # chunk cap None: a chunk group larger than hot_band_cap must NOT
+        # be split (the MinHash cap must not leak onto the chunk family)
+        ("within_candidates", DedupeConfig(hot_band_cap=10), 200),
+    ],
+    ids=["primitive-capped", "entry-capped", "entry-uncapped"],
+)
+def test_simhash_hot_chunk_stays_bounded(spark, path, cfg, n):
     """NEAR-identical (not byte-identical) boilerplate shares simhash
-    chunk values; the salted sub-split must keep the chunk self-join
-    from going quadratic while still surfacing near-dup pairs."""
-    from lieu_spark.functions.simhash import with_simhash
-    from lieu_spark.functions.text import token_hashes, tokenize
-    from lieu_spark.operators.simhash_path import simhash_candidate_pairs
+    chunk values; the salted sub-split (simhash_hot_chunk_cap) must keep
+    the chunk self-join from going quadratic while still surfacing
+    near-dup pairs — and with the cap unset, every pair within
+    simhash_hamming_max must surface, however large the chunk group."""
+    from lieu_spark.operators.blocking import within_candidates
+    from lieu_spark.operators.lsh import band_stats, band_table_dual
+    from lieu_spark.operators.simhash_path import (
+        is_chunk_band,
+        simhash_candidate_pairs,
+    )
+    from lieu_spark.pipeline import build_features
 
-    cfg = DedupeConfig(simhash_hot_chunk_cap=50)  # opt-in salting
     boiler = "thank you for contacting support your ticket has been received " * 6
     # unique suffix token => distinct text_sha, near-identical simhash
-    rows = [(f"c{i:05d}", boiler + f" case{i}") for i in range(800)]
-    df = spark.createDataFrame(rows, "conv_id string, doc string")
-    df = df.withColumn("tokens", tokenize(F.col("doc")))
-    df = df.withColumn("token_hashes", token_hashes(F.col("tokens")))
-    feats = with_simhash(df, cfg)
+    rows = [(f"c{i:05d}", 1, boiler + f" case{i}") for i in range(n)]
+    convs = spark.createDataFrame(rows, "conv_id string, n_turns int, doc string")
+    feats = build_features(
+        convs.withColumn("text_sha", F.sha2("doc", 256)), cfg
+    ).persist()
 
-    pairs = simhash_candidate_pairs(feats, cfg)
-    n = pairs.count()
-    # unsalted would be ~800*799/2 = 319,600 per colliding chunk; the
-    # cap bounds each sub-group to ~50 members -> ~20k pairs max
-    assert 0 < n < 50_000, n
-    # pairs that survive are genuinely near-exact (hamming filter)
-    assert pairs.filter(F.col("hamming") > cfg.simhash_hamming_max).count() == 0
+    if path == "simhash_candidate_pairs":
+        pairs = simhash_candidate_pairs(feats, cfg)
+        # pairs that survive are genuinely near-exact (hamming filter)
+        assert pairs.filter(F.col("hamming") > cfg.simhash_hamming_max).count() == 0
+    else:
+        # the chunk family alone: the MinHash bands of this corpus are
+        # one quadratic group per band, which is not under test here
+        bands = band_table_dual(feats, cfg).filter(is_chunk_band(cfg))
+        stats = band_stats(bands, cfg).agg(
+            F.max("bsize").alias("largest"), F.max("is_hot").alias("hot")
+        ).first()
+        # is_hot is per family: a chunk group is hot only past its own
+        # cap, never past hot_band_cap
+        if cfg.simhash_hot_chunk_cap is None:
+            assert stats.largest > cfg.hot_band_cap and not stats.hot
+        else:
+            assert stats.largest > cfg.simhash_hot_chunk_cap and stats.hot
+        pairs = within_candidates(bands, feats, cfg).filter(
+            F.col("source") == "simhash"
+        ).dropDuplicates(["id_a", "id_b"])
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+
+    sims = sorted((r.conv_id, r.simhash) for r in feats.collect())
+    feats.unpersist()
+    near = {
+        (a, b)
+        for i, (a, ha) in enumerate(sims)
+        for b, hb in sims[i + 1:]
+        if bin((ha ^ hb) & ((1 << 64) - 1)).count("1") <= cfg.simhash_hamming_max
+    }
+    assert got <= near
+    if cfg.simhash_hot_chunk_cap is None:
+        assert got == near
+    else:
+        # unsalted would be ~800*799/2 = 319,600 per colliding chunk; the
+        # cap bounds each sub-group to ~50 members -> ~20k pairs max
+        assert 0 < len(got) < 50_000, len(got)

@@ -71,31 +71,27 @@ def test_incremental_stream_dedupe(spark, tmp_path):
     assert index2.count() == n1  # batch 2 was all dupes; nothing new folded
 
 
-def test_stream_simhash_within_batch_matches_pipeline(spark, tmp_path):
-    """A word-shuffled copy keeps the token multiset (SimHash hamming 0)
-    but shares almost no 5-shingles, so only the SimHash family pairs
-    it. Arriving in one file, the stream's within-batch candidates
-    (blocking.within_candidates, gated on cfg.with_simhash_path like
-    the pipeline's) must yield the same verified row as run_pipeline."""
-    import random
-    from datetime import datetime
-
+@pytest.mark.parametrize("arrival", ["same_file", "later_file"])
+def test_stream_simhash_within_batch_matches_pipeline(
+    spark, tmp_path, shuffled_copy, arrival
+):
+    """A word-shuffled copy pairs only through the SimHash family. Arriving
+    in the same file as its original (within-batch candidates) or in a
+    later one (the stored band state carries the chunk family, so
+    cross_candidates pairs it), the stream must yield the same verified
+    row as run_pipeline."""
     from lieu_spark.pipeline import run_pipeline
 
-    words = [f"word{i}" for i in range(80)]
-    shuffled = list(words)
-    random.Random(3).shuffle(shuffled)
-    ts = datetime(2024, 1, 1)
-    tdf = spark.createDataFrame(
-        [
-            ("s000000001", 0, "user", " ".join(words), None, ts),
-            ("s000000002", 0, "user", " ".join(shuffled), None, ts),
-        ],
-        corpus.TRANSCRIPT_SCHEMA,
+    original, copy = shuffled_copy
+    tdf = original.unionByName(copy)
+    in_dir = str(tmp_path / "in")
+    files = [tdf] if arrival == "same_file" else [original, copy]
+    for f in files:
+        f.coalesce(1).write.mode("append").parquet(in_dir)
+    run_stream(
+        spark, in_dir, str(tmp_path / "work"), CFG,
+        available_now=True, files_per_trigger=1,
     )
-    in_dir = tmp_path / "in"
-    tdf.coalesce(1).write.parquet(str(in_dir))
-    run_stream(spark, str(in_dir), str(tmp_path / "work"), CFG, available_now=True)
 
     cols = ["id_a", "id_b", "jaccard", "is_exact", "status"]
     batch = run_pipeline(spark, tdf, CFG, with_spans=False).verified
@@ -280,10 +276,11 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
             "simple"
         )
     )
-    # exactly TWO Generates, BOTH on the incoming micro-batch side (its
-    # primary- and alt-family banding); the stored side is a plain
-    # parquet scan of pre-derived bands — zero Generate over the index
-    assert plan.count("Generate") == 2, plan
+    # exactly THREE Generates, ALL on the incoming micro-batch side (its
+    # primary-family, alt-family and SimHash chunk-family banding); the
+    # stored side is a plain parquet scan of pre-derived bands — zero
+    # Generate over the index
+    assert plan.count("Generate") == 3, plan
     # the stored side is a parquet FileScan of pre-derived bands …
     assert "FileScan parquet" in plan, plan
     # … partition-pruned: the batch touches < all BAND_BUCKETS buckets,
