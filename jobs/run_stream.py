@@ -15,9 +15,9 @@ batch-over-batch index merge, /root/reference/lib/lieu/spark/tfidf.py:43-45).
 
 State under --work-dir:
     index/batch_id=N/   canonical feature index, folded per batch
-    bands/batch_id=N/   derived LSH band table, folded per batch
-                        (bucketed by band_hash; the per-batch match
-                        reads this, never re-bands the index)
+    bands/batch_id=N/   derived band table (MinHash bands and SimHash
+                        chunks), folded per batch; the per-batch match
+                        reads this, never re-bands the index
     shas/batch_id=N/    (conv_id, text_sha) fold, sha-sorted — the
                         cross-batch exact match reads this with the
                         batch's shas pushed into the scan

@@ -167,11 +167,13 @@ class DedupeConfig:
 
         ``band_schema`` is the same kind of revision for the band state
         of every config: revision 2 stores the SimHash chunk family as
-        band rows (with a simhash column), so stage stores and stream
-        work_dirs written before it recompute or are refused instead of
-        silently missing chunk rows or mixing band schemas."""
+        band rows (with a simhash column); revision 3 stores a stream's
+        bands as plain per-batch subdirs, with no band-hash bucket
+        partitions under them. Stage stores and stream work_dirs written
+        before a revision recompute or are refused instead of silently
+        missing chunk rows or mixing band layouts."""
         d = asdict(self)
-        d["band_schema"] = 2
+        d["band_schema"] = 3
         if self.asymmetry_field is not None or self.revision_field is not None:
             d["aux_semantics"] = 2
         payload = json.dumps(d, sort_keys=True).encode()

@@ -39,10 +39,10 @@ What is incremental (the scale story):
     a shuffle join instead of a driver OOM).
   - Candidate generation joins the small incoming band table (every
     blocking family: MinHash bands and SimHash chunks) against the
-    standing band state; at production scale the state
-    tables are the pipeline's persisted stage tables, bucketed on the
-    join key (sources/io.write_bucketed) so the standing side is not
-    even shuffled.
+    standing band state. The state tables are the pipeline's
+    persisted stage tables, plain parquet with no bucketing, so the
+    standing side is shuffled for the join unless AQE broadcasts the
+    other side.
   - Connected components re-runs over the merged PAIR set — pairs are
     a vanishing fraction of the corpus, so full CC is not the
     bottleneck (it is linear in dup pairs, not in documents).

@@ -15,17 +15,22 @@ Scale shape (the O(index)-per-batch fix): the *derived* band table
 (every blocking family: MinHash bands and SimHash chunks) is folded
 incrementally per batch exactly like the feature table — the
 reference's incremental fold updates the derived statistic, not the raw
-docs (lib/lieu/spark/tfidf.py:43-45) — and stored partitioned by a
-band-hash bucket. Each micro-batch then:
+docs (lib/lieu/spark/tfidf.py:43-45) — so no batch re-bands (sig
+explodes) the index. Each micro-batch then:
   * reads only directory METADATA (one listStatus) to learn the newest
     folded batch — no full-scan ``max(batch_id)`` aggregates;
   * joins its own (small) band table against the STORED band state with
-    the incoming side broadcast and the stored side pruned to the
-    band-hash buckets the batch actually touches — one pruned scan of
-    pre-derived bands, never a re-band (sig explode) of the index.
-Per-batch match cost is therefore O(batch) work + one pruned metadata-
-backed scan, not O(index) recompute — the per-batch walls stay flat as
-the index grows (tracked by perfbench's ``ingest.latency_growth``).
+    one equi-join (the reference's ``match()``), the incoming side
+    broadcast.
+The stored band scan is not pruned by key. Band hashes are uniform:
+one conversation's 36+ band rows touch about 28 of 64 hash buckets and
+ten conversations touch all 64, so a hash-bucket layout prunes nothing
+at the batch sizes the benchmark and the tests run; only a 1-2
+conversation trickle batch would skip files (it reads about 45-70% of
+them under 64 buckets). Every batch therefore scans the whole band
+state, which grows with the stream (about 0.25 MB on disk after the
+benchmark's two-batch stream-append drain). The verify-side index and
+the sha fold stay pruned by key (``_pruned``).
 
 State layer: a work_dir holds ``index/``, ``bands/`` and ``shas/`` (the
 per-batch state kinds of ``_STATE``, each defined once — how it derives
@@ -64,15 +69,6 @@ from ..pipeline import build_features
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
-
-# default band-store partitioning modulus for NEW state dirs: stored
-# bands are partitioned by pmod(band_hash, buckets) so a micro-batch's
-# match join prunes to the buckets it actually touches. The modulus an
-# EXISTING store was written with is stamped in its _layout.json and
-# always wins — pruning with a different modulus than the one baked
-# into the directory names would silently drop true matches, so this
-# constant only seeds brand-new state.
-BAND_BUCKETS = 64
 
 # cap on the candidate-id literal list pushed into the verify-side index
 # scan (In(conv_id, ...) row-group pruning); larger candidate sets fall
@@ -131,11 +127,6 @@ def _batch_subdir_ids(spark: SparkSession, dir_str: str) -> list[int] | None:
     return ids
 
 
-def _bh_bucket(buckets: int):
-    """Band-hash bucket a band row is stored (and pruned) under."""
-    return F.pmod(F.col("band_hash"), F.lit(buckets)).cast("int")
-
-
 def _sha_layout(df: DataFrame) -> DataFrameWriter:
     # range-partitioned + sorted: each file covers a contiguous sha
     # range, so the cross-batch exact match's pushed In(text_sha, ...)
@@ -172,17 +163,19 @@ _STATE: dict[str, _Kind] = {
         ),
     ),
     # the DERIVED band table (MinHash bands and SimHash chunks, with the
-    # chunk rows' simhash), partitioned by band-hash bucket so no later
-    # batch re-bands the index and a batch's match prunes to the buckets
-    # it touches. The dual-family and simhash columns are required: bands
+    # chunk rows' simhash), so no later batch re-bands the index. Written
+    # unsorted: nothing reads it by key. band_table_dual unions its
+    # families, which adds up their partition counts, so the (narrow)
+    # coalesce keeps at most one file per shuffle partition: 16 -> 8
+    # files per batch on the stream-append drain (seed 1, 8 shuffle
+    # partitions).
+    # The dual-family and simhash columns are required: bands
     # backfilled from an older index would silently lack a family.
     "bands": _Kind(
-        derive=lambda ded, feats: band_table_dual(feats, ded.cfg).withColumn(
-            "bh_bucket", _bh_bucket(ded._band_buckets())
-        ),
-        layout=lambda df: df.repartition(F.col("bh_bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bh_bucket"),
+        derive=lambda ded, feats: band_table_dual(feats, ded.cfg),
+        layout=lambda df: df.coalesce(
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        ).write.mode("overwrite"),
         needs=("alt_sig", "char_primary", "simhash"),
     ),
     # the (conv_id, text_sha) projection the cross-batch exact match
@@ -197,8 +190,8 @@ _STATE: dict[str, _Kind] = {
 def _pruned(stored: DataFrame, col: str, keys: DataFrame, cap: int) -> DataFrame:
     """``stored`` restricted to the rows whose ``col`` is one of the
     batch-side ``keys``: a bounded collect (at most ``cap`` distinct
-    keys) pushed into the scan as ``isin`` — partition pruning on a
-    partition column, row-group pruning on a sorted one. Past the cap
+    keys) pushed into the scan as ``isin``, which row-group-prunes a
+    column the kind's layout sorts. Past the cap
     the plain join stands. Parity-exact either way: a stored row whose
     key the batch side lacks cannot join."""
     got = [r[0] for r in keys.distinct().limit(cap + 1).collect()]
@@ -522,51 +515,10 @@ class IncrementalDeduper:
         """Write one state kind's rows of a batch to the batch's own
         subdir, in the kind's layout (mode=overwrite: a replay replaces
         its own output)."""
-        if kind == "bands":
-            self._stamp_band_layout()
         spec = _STATE[kind]
         spec.layout(spec.derive(self, feats)).parquet(
             f"{self._dir(kind)}/batch_id={batch_id}"
         )
-
-    def _band_buckets(self) -> int:
-        """Partitioning modulus of the band store: read from the store's
-        _layout.json (stamped on first write). A store that predates the
-        marker was written with the original constant 64 and is stamped
-        as such; only a brand-new store adopts the current BAND_BUCKETS.
-        Pruning/folding MUST use the stored modulus — the bucket values
-        are baked into directory names."""
-        import json as _json
-
-        if getattr(self, "_band_buckets_cached", None) is not None:
-            return self._band_buckets_cached
-        marker = f"{self._dir('bands')}/_layout.json"
-        if _path_exists(self.spark, marker):
-            buckets = int(_json.loads(_fs_read_text(self.spark, marker))["band_buckets"])
-        else:
-            # infer WITHOUT writing: this accessor also serves read-only
-            # paths (pruning, diagnostics against a store another writer
-            # owns) and a reader must not mutate state under the
-            # single-writer contract — the marker is stamped by the
-            # band fold (the write path) only
-            legacy = _batch_subdir_ids(self.spark, self._dir("bands"))
-            buckets = 64 if legacy else BAND_BUCKETS
-        self._band_buckets_cached = buckets
-        return buckets
-
-    def _stamp_band_layout(self) -> None:
-        """Persist the band store's partitioning modulus (write path
-        only — called by the band fold so every later reader prunes with
-        the modulus the directory names were actually written with)."""
-        import json as _json
-
-        marker = f"{self._dir('bands')}/_layout.json"
-        if not _path_exists(self.spark, marker):
-            _fs_write_text(
-                self.spark,
-                marker,
-                _json.dumps({"band_buckets": self._band_buckets()}),
-            )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Candidates (operators/blocking.py) = within-batch self-pairs
@@ -581,16 +533,13 @@ class IncrementalDeduper:
         pipeline's clusters (parity asserted in tests/test_streaming.py).
 
         The vs-index match joins the batch's bands (broadcast — a
-        micro-batch is small) against the stored, pre-derived band
-        state pruned to the batch's own band-hash buckets: no sig
-        explode over the index, no shuffle of the stored side. The
-        verify-side feature fetch is bounded to the candidate ids (a
-        pushed In(conv_id,...) predicate that row-group-prunes the wide
-        columns against the sorted fold). The cross-batch exact match
-        reads a dedicated sha-sorted (conv_id, text_sha) fold pruned to
-        the batch's own shas — so EVERY per-batch touch of the canonical
-        state is pruned or bounded (``_pruned``); nothing scales with
-        raw index size except the (skippable) row groups themselves.
+        micro-batch is small) against the whole stored, pre-derived band
+        state: no sig explode over the index, no shuffle of the stored
+        side. The verify-side feature fetch is bounded to the candidate
+        ids (a pushed In(conv_id,...) predicate that row-group-prunes the
+        wide columns against the sorted fold). The cross-batch exact
+        match reads a dedicated sha-sorted (conv_id, text_sha) fold
+        pruned to the batch's own shas (``_pruned``).
 
         Exactly-once state under at-least-once foreachBatch: pairs and
         the state folds are written to per-batch
@@ -618,8 +567,8 @@ class IncrementalDeduper:
         # action reuses (no re-execution).
         small_batch = feats.count() <= STREAM_BROADCAST_CAP
         feat_reps = blocking.representatives(feats)
-        # persisted: three differently-pruned consumers (within-batch
-        # band self-join, the bucket-prune collect, the vs-index match)
+        # persisted: three consumers — the within-batch band self-join
+        # and the cross join's two uses in lsh.capped_group_join
         feat_bands = band_table_dual(feat_reps, self.cfg).persist()
         within = blocking.within_candidates(
             feat_bands, feats, self.cfg
@@ -627,34 +576,16 @@ class IncrementalDeduper:
         self._refuse_restarted_batch_ids(batch_id)
         index = self._state("index", before_batch=batch_id)
         if index is not None:
-            # state loads stay serial (they can backfill/write); the two
-            # prunes each run a bounded read-only collect (the batch's
-            # touched buckets / the batch's distinct shas) — independent
-            # jobs, so they run concurrently and the shorter one hides
-            # inside the longer (the fold-write rule applied to the
-            # match phase's driver round-trips). The bucket prune reads
-            # the STORE's modulus, never the module constant: pruning
-            # with another modulus than the directory names were
-            # written with would silently drop true matches.
             stored_bands = self._state("bands", before_batch=batch_id)
-            stored_shas = self._state("shas", before_batch=batch_id)
-            mod = self._band_buckets()
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_bands = pool.submit(
-                    _pruned, stored_bands, "bh_bucket",
-                    feat_bands.select(_bh_bucket(mod)), mod - 1,
-                )
-                fut_shas = pool.submit(
-                    _pruned, stored_shas, "text_sha",
-                    feats.select("text_sha"), VERIFY_ID_CAP,
-                )
-                pruned_bands = fut_bands.result()
-                pruned_shas = fut_shas.result()
+            stored_shas = _pruned(
+                self._state("shas", before_batch=batch_id),
+                "text_sha",
+                feats.select("text_sha"),
+                VERIFY_ID_CAP,
+            )
             cross = blocking.cross_candidates(
-                pruned_bands,
-                pruned_shas,
+                stored_bands,
+                stored_shas,
                 feat_bands,
                 feats,
                 self.cfg,

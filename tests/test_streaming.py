@@ -224,21 +224,14 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
     """The vs-index LSH match must read the STORED pre-derived band
     table — no Generate/explode over the index side (that re-band was
     the r2 verdict's one remaining O(index)-per-batch scale-killer) —
-    with the incoming micro-batch side broadcast and the stored scan
-    partition-pruned to the batch's band-hash buckets."""
+    with the incoming micro-batch side broadcast."""
     import datetime as dt
 
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    from lieu_spark.operators import blocking
     from lieu_spark.operators.assemble import assemble_conversations
     from lieu_spark.operators.lsh import band_table_dual, match_pairs
     from lieu_spark.pipeline import build_features
-    from lieu_spark.streaming.ingest import (
-        IncrementalDeduper,
-        _bh_bucket,
-        _pruned,
-    )
+    from lieu_spark.streaming.ingest import IncrementalDeduper
 
     ts = dt.datetime(2026, 1, 1)
     b1 = _mini_batch(spark, [
@@ -257,20 +250,9 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
          None, ts),
     ])
     feats = build_features(assemble_conversations(b2), CFG)
-    rep_w = Window.partitionBy("text_sha")
-    feat_reps = (
-        feats.filter(F.size("shingle_hashes") > 0)
-        .withColumn("_rep", F.min("conv_id").over(rep_w))
-        .filter(F.col("conv_id") == F.col("_rep"))
-        .drop("_rep")
-    )
-    feat_bands = band_table_dual(feat_reps, CFG)
+    feat_bands = band_table_dual(blocking.representatives(feats), CFG)
     stored = ded._state("bands", before_batch=1)
-    mod = ded._band_buckets()
-    cross = match_pairs(
-        _pruned(stored, "bh_bucket", feat_bands.select(_bh_bucket(mod)), mod - 1),
-        feat_bands, CFG, broadcast_incoming=True,
-    )
+    cross = match_pairs(stored, feat_bands, CFG, broadcast_incoming=True)
     plan = cross._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "simple"
@@ -281,15 +263,11 @@ def test_stream_match_plan_no_index_reband(spark, tmp_path):
     # stored side is a plain parquet scan of pre-derived bands — zero
     # Generate over the index
     assert plan.count("Generate") == 3, plan
-    # the stored side is a parquet FileScan of pre-derived bands …
+    # the stored side is a parquet FileScan of pre-derived bands
     assert "FileScan parquet" in plan, plan
-    # … partition-pruned: the batch touches < all BAND_BUCKETS buckets,
-    # so the bh_bucket INSET predicate lands in PartitionFilters
-    scan_line = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
-    assert "bh_bucket" in scan_line.split("PartitionFilters")[1], scan_line
     # the broadcast goes to the incoming (small) side
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    # and the pruned plan still finds the cross-batch match
+    # and the plan finds the cross-batch match
     got = {(r.canonical_id, r.incoming_id) for r in cross.collect()}
     assert ("a0", "n1") in got, sorted(got)
 
@@ -316,6 +294,28 @@ def test_stream_config_fingerprint_guard(spark, tmp_path):
         )
     # same config resumes fine
     run_stream(spark, str(in_dir), str(work), CFG, available_now=True)
+
+
+def test_stream_refuses_band_schema_2_work_dir(spark, tmp_path):
+    """Band schema revision 3 stores bands as plain per-batch subdirs; a
+    work_dir stamped under revision 2 holds band-hash bucket partition subdirs
+    under each band batch and is refused by the fingerprint guard instead
+    of being misread."""
+    import hashlib
+    import json
+    from dataclasses import asdict
+
+    d = asdict(CFG)
+    d["band_schema"] = 2
+    old_fp = hashlib.sha256(
+        json.dumps(d, sort_keys=True).encode()
+    ).hexdigest()[:16]
+    work = tmp_path / "ws2"
+    spark.createDataFrame(
+        [(json.dumps({"fingerprint": old_fp}),)], "value string"
+    ).coalesce(1).write.mode("overwrite").text(f"{work}/_config_marker")
+    with pytest.raises(ValueError, match="fingerprint"):
+        run_stream(spark, str(tmp_path / "in"), str(work), CFG)
 
 
 def test_stream_verify_index_scan_bounded(spark, tmp_path):
@@ -593,6 +593,7 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
     up again afterwards, so the ordinary backfill could never detect
     it)."""
     import datetime as dt
+    import os
     import shutil
 
     from lieu_spark.streaming.ingest import (
@@ -617,9 +618,22 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
     for i in range(4):
         ded.process_batch(batch(i), i)
 
+    def assert_plain_band_layout(d):
+        # bands/ holds batch subdirs only (no layout marker file), and
+        # each holds its parquet files directly, like index/ and shas/:
+        # no partition subdirs
+        names = os.listdir(f"{d}/bands")
+        assert names and all(n.startswith("batch_id=") for n in names), names
+        for sub in names:
+            entries = os.listdir(f"{d}/bands/{sub}")
+            assert any(e.endswith(".parquet") for e in entries), (sub, entries)
+            assert not any(
+                os.path.isdir(f"{d}/bands/{sub}/{e}") for e in entries
+            ), (sub, entries)
+
     def band_rows(d):
         return sorted(
-            (r.id, r.band, r.band_hash, r.bh_bucket, r.batch_id)
+            (r.id, r.band, r.band_hash, r.batch_id)
             for r in spark.read.parquet(f"{d}/bands").collect()
         )
 
@@ -629,6 +643,7 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
             for r in spark.read.parquet(f"{d}/shas").collect()
         )
 
+    assert_plain_band_layout(work)
     bands_before = band_rows(work)
     shas_before = sha_rows(work)
 
@@ -642,6 +657,7 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
         None, ts,
     )])
     IncrementalDeduper(spark, str(only), CFG).process_batch(copy, 4)
+    assert_plain_band_layout(only)
     assert [r for r in band_rows(only) if r[-1] < 4] == bands_before
     assert [r for r in sha_rows(only) if r[-1] < 4] == shas_before
     hits = {
@@ -664,6 +680,7 @@ def test_compaction_backfills_band_holes_and_legacy_dirs(spark, tmp_path):
     assert summary["shas"]["merged"] == 3
     assert sorted(_batch_subdir_ids(spark, f"{work}/shas")) == [2, 3]
     assert summary["bands"]["merged"] == 3
+    assert_plain_band_layout(work)
     # the hole was backfilled before the merge: row-identical band state
     assert sorted(
         (r.id, r.band, r.band_hash)
@@ -739,29 +756,6 @@ def test_stream_correct_with_broadcast_hints_off(spark, tmp_path, monkeypatch):
     assert got == want
     # the byte-copies matched their batch-1 originals across batches
     assert any(a.startswith("c") and b.startswith("z") for a, b, *_ in want)
-
-
-def test_band_layout_marker_only_written_by_write_path(spark, tmp_path):
-    """_band_buckets on a read-only path must not mutate the store
-    (single-writer contract): the _layout.json marker appears only once
-    the write path folds bands."""
-    import datetime as dt
-    import os
-
-    from lieu_spark.streaming.ingest import BAND_BUCKETS, IncrementalDeduper
-
-    work = tmp_path / "wm"
-    ded = IncrementalDeduper(spark, str(work), CFG)
-    assert ded._band_buckets() == BAND_BUCKETS
-    assert not os.path.exists(f"{work}/bands/_layout.json")
-
-    ts = dt.datetime(2026, 1, 1)
-    ded.process_batch(_mini_batch(spark, [(
-        "m0", 0, "user",
-        "marker stamp doc " + " ".join(f"mk{k}" for k in range(10)),
-        None, ts,
-    )]), 0)
-    assert os.path.exists(f"{work}/bands/_layout.json")
 
 
 def test_compact_state_rejects_keep_last_below_one(spark, tmp_path):
